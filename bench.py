@@ -335,9 +335,9 @@ def main() -> None:
         lambda: sssp(spark, cs, source=src0, weighted=False, directed=False).count(),
     )
 
-    # ---- CSR-kernel operators, cogroup vs worker-local block cache --------
-    # the load-once-compute-many claim gets a tracked number per operator
-    # (VERDICT r3 #8): cache mode must not regress vs cogroup shipping
+    # ---- CSR-kernel operators (blocks cogrouped into every superstep) ----
+    # query names keep their historical ``_cogroup`` suffix so walls stay
+    # comparable with earlier BENCH rounds
     from goffish_v3_spark.operators.lpa import lpa_csr
     from goffish_v3_spark.operators.sssp import sssp_csr
     from goffish_v3_spark.operators.subgraph_pagerank import csr_pagerank
@@ -348,36 +348,13 @@ def main() -> None:
             spark, cs, num_parts=CPUS, fixed_iterations=PR_BENCH_ITERS
         ).count(),
     )
-    b.run(
-        "csr_pagerank_10it_cached",
-        lambda: csr_pagerank(
-            spark, cs, num_parts=CPUS, fixed_iterations=PR_BENCH_ITERS,
-            cache_blocks=True,
-        ).count(),
-    )
     b.run("lpa_csr_cogroup", lambda: lpa_csr(spark, cs, num_parts=CPUS).count())
-    b.run(
-        "lpa_csr_cached",
-        lambda: lpa_csr(spark, cs, num_parts=CPUS, cache_blocks=True).count(),
-    )
     b.run(
         "sssp_csr_cogroup",
         lambda: sssp_csr(
             spark, cs, source=src0, weighted=False, directed=False, num_parts=CPUS
         ).count(),
     )
-    b.run(
-        "sssp_csr_cached",
-        lambda: sssp_csr(
-            spark, cs, source=src0, weighted=False, directed=False,
-            num_parts=CPUS, cache_blocks=True,
-        ).count(),
-    )
-    for op in ("csr_pagerank_10it", "lpa_csr", "sssp_csr"):
-        cg, ca = b.clean_wall(f"{op}_cogroup"), b.clean_wall(f"{op}_cached")
-        extra[f"{op}_cache_speedup"] = (
-            round(cg / ca, 3) if (cg is not None and ca is not None) else None
-        )
 
     from goffish_v3_spark.operators.spanning_forest import spanning_forest
 

@@ -65,9 +65,12 @@ def _with_h1_h2(df: DataFrame, key_col: str, seed: int, carry: list[str]) -> Dat
 def bloom_bits(
     df: DataFrame, key_col: str, m: int = 4096, k: int = 3, seed: int = 0
 ) -> DataFrame:
-    """``(pos long)`` — the distinct set-bit positions of the Bloom filter
-    over ``df[key_col]``. At most ``m`` rows no matter how many keys
-    stream in; merge two filters by ``union().distinct()``. Positions are
+    """``(pos long, m long, k int, seed long)`` — the distinct set-bit
+    positions of the Bloom filter over ``df[key_col]``, each row carrying
+    the constant ``(m, k, seed)`` it was built with so
+    :func:`bloom_prefilter` can refuse a mismatched probe. At most ``m``
+    rows no matter how many keys stream in; merge two filters built with
+    the same parameters by ``union().distinct()``. Positions are
     Kirsch–Mitzenmacher double hashing: ``(h1 + i·h2) mod m`` for
     ``i in [0, k)`` — k positions from two mixer evaluations."""
     _check_params(m, k)
@@ -78,6 +81,12 @@ def bloom_bits(
         d.withColumn("i", F.explode(F.array(*[F.lit(j) for j in range(k)])))
         .select(((F.col("h1") + F.col("i") * F.col("h2")) % m).alias("pos"))
         .distinct()
+        .select(
+            "pos",
+            F.lit(m).cast("long").alias("m"),
+            F.lit(k).alias("k"),
+            F.lit(seed).cast("long").alias("seed"),
+        )
     )
 
 
@@ -94,19 +103,41 @@ def bloom_prefilter(
     SEMI joins** against the (≤ m row) bit table: no shuffle, no groupBy,
     row multiplicity and schema preserved exactly. Supersets the true
     semi-join (false positives possible, false negatives impossible), so
-    following it with the real join yields the plain-join result."""
+    following it with the real join yields the plain-join result.
+
+    ``bits`` must come from :func:`bloom_bits` with the same ``(m, k,
+    seed)``: probing with other parameters would test the wrong positions
+    and silently drop true rows, so a mismatch fails the query when the
+    bit table is read (and a table without the parameter columns raises
+    ``ValueError`` here)."""
     _check_params(m, k)
     _check_integral_key(fact, fact_key, "bloom_prefilter")
     out_cols = list(fact.columns)
     if "h1" in out_cols or "h2" in out_cols:
         raise ValueError("fact must not already carry h1/h2 columns")
+    if not {"pos", "m", "k", "seed"} <= set(bits.columns):
+        raise ValueError(
+            "bits must be a bloom_bits table carrying (pos, m, k, seed); "
+            f"got columns {bits.columns}"
+        )
+    same = (F.col("m") == m) & (F.col("k") == k) & (F.col("seed") == seed)
+    pos = F.when(same, F.col("pos")).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"bloom_prefilter(m={m}, k={k}, seed={seed}) got bits built "
+                "with m=%d, k=%d, seed=%d",
+                "m", "k", "seed",
+            )
+        )
+    )
+    checked = bits.select(pos.alias("pos"))
     d = _with_h1_h2(fact, fact_key, seed, out_cols)
     for i in range(k):
         col = f"_pos{i}"
         pos_i = (F.col("h1") + F.lit(i) * F.col("h2")) % m
         d = (
             d.withColumn(col, pos_i)
-            .join(F.broadcast(bits.withColumnRenamed("pos", col)), col, "left_semi")
+            .join(F.broadcast(checked.withColumnRenamed("pos", col)), col, "left_semi")
             .drop(col)
         )
     return d.select(*out_cols)

@@ -32,7 +32,10 @@ agree on the final numbers.
 Scale shape: per superstep ONE cogrouped ``applyInPandas`` over the persisted
 CSR blocks + O(cut) message rows. Job count is O(global rounds) — a few,
 bounded by how far core changes must propagate across partitions — instead of
-the O(max_core × peeling depth) driver loop this replaces.
+the O(max_core × peeling depth) driver loop this replaces. When the summed
+block bytes fit a budget, the slow cross-partition tail after the first
+rounds runs as ONE task: a cogroup of every block with every estimate under a
+constant key, solved to global fixpoint (see _make_consolidated_kernel).
 """
 
 from __future__ import annotations
@@ -144,7 +147,7 @@ def _hindex_fixpoint_frontier(
     return est
 
 
-def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | None):
+def _make_consolidated_kernel(cap: int | None):
     """Tail-consolidation superstep (VERDICT r4 #2): merge EVERY partition's
     CSR block inside one task and run the global h-index fixpoint to
     completion. Correct from any reachable state — estimates are upper
@@ -154,32 +157,16 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
     plus a full kind-3 shadow per partition (every remote estimate it
     references) so the k-core finalize pass works unchanged.
 
-    Only legal when the summed block bytes fit one task (the caller's byte
-    budget) — the 100 TB posture is: distributed waves grind the bulk creep
-    in parallel, and the serial cross-partition tail collapses into one task
-    the moment the whole remaining problem provably fits."""
+    Runs as a cogroup of ALL blocks with ALL kind-0 state under one constant
+    group key, so the blocks arrive through the same Arrow channel as every
+    other superstep. Only legal when the summed block bytes fit one task
+    (the caller's byte budget) — the 100 TB posture is: distributed waves
+    grind the bulk creep in parallel, and the serial cross-partition tail
+    collapses into one task the moment the whole remaining problem provably
+    fits."""
 
-    def fn(it):
-        import os
-        import time as _t
-
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        _trace = bool(os.environ.get("GOFFISH_KCORE_TRACE"))
-        _t0 = _t.monotonic()
-        pdf = pd.concat(list(it), ignore_index=True)
-        state = pdf[pdf["kind"] == 0]
-        blks = []
-        for p in parts:
-            blk = load_block(blocks_path, int(p))
-            if blk is None:
-                raise RuntimeError(
-                    f"CSR block for part {int(p)} not found under {blocks_path}"
-                )
-            blks.append(blk)
-        if _trace:
-            print(f"[kcore-consol] load {_t.monotonic() - _t0:.2f}s", flush=True)
-            _t0 = _t.monotonic()
+    def fn(_key, csr_pdf: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
+        blks = [CsrBlock(r) for _, r in csr_pdf.iterrows()]
         offs = np.concatenate(
             ([0], np.cumsum([b.n_local for b in blks]))
         ).astype(np.int64)
@@ -220,13 +207,7 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
         )
         if cap is not None:
             est = np.minimum(est, cap)
-        if _trace:
-            print(f"[kcore-consol] merge {_t.monotonic() - _t0:.2f}s", flush=True)
-            _t0 = _t.monotonic()
         est = _hindex_fixpoint_frontier(indptr, dst_idx, est)
-        if _trace:
-            print(f"[kcore-consol] fixpoint {_t.monotonic() - _t0:.2f}s", flush=True)
-            _t0 = _t.monotonic()
 
         frames = []
         for i, b in enumerate(blks):
@@ -255,7 +236,7 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
                     }
                 )
                 frames.append(sh)
-        yield pd.concat(frames, ignore_index=True)
+        return pd.concat(frames, ignore_index=True)
 
     return fn
 
@@ -307,21 +288,41 @@ def _merge_boundary(sm_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return svid, sval
 
 
-def _make_kernel(
-    superstep: int,
-    cap: int | None = None,
-    blocks_path: str | None = None,
-    changed_only: bool = False,
-):
+def _passthrough(sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    """Quiescent-partition fast path (wake-on-message at partition
+    granularity, the reference's voteToHalt shape): at superstep ≥ 2 a
+    partition with no incoming kind-1 messages is already at local
+    h-index fixpoint — its previous superstep ran the local pass to
+    fixpoint against remote estimates that have not changed since
+    (estimates are monotone; only a message can lower a remote input).
+    Re-emit state (kind 0) and shadows (kind 3) verbatim with a
+    changed=0 marker: no CSR block decode, no numpy pass, no sends. This
+    is what makes chain-overshoot steps and the narrow convergence
+    wavefront cheap."""
+    out = sm_pdf[sm_pdf["kind"].isin((0, 3))]
+    if len(out) == 0:  # defensive: a group always carries kind-0 state
+        return pd.DataFrame(columns=list(_EMPTY_OUT)).astype(_EMPTY_OUT)
+    part = np.int32(out["part"].iloc[0])
+    marker = pd.DataFrame(
+        {
+            "part": np.array([part], dtype=np.int32),
+            "kind": np.array([2], dtype=np.int32),
+            "vid": np.array([-1], dtype=np.int64),
+            "a": np.array([0], dtype=np.int64),
+            "payload": [None],
+        }
+    )
+    return pd.concat(
+        [out[["part", "kind", "vid", "a", "payload"]], marker],
+        ignore_index=True,
+    )
+
+
+def _make_kernel(superstep: int, cap: int | None = None, changed_only: bool = False):
     """``cap`` caps estimates at k: the capped iteration converges to
     min(core, k) — distributed peeling for a fixed k. Cascades stop as soon
     as values saturate at the cap, so the k-core query needs only a handful
     of global rounds instead of the full decomposition's propagation depth.
-
-    ``blocks_path`` switches from cogrouped block shipping to the
-    worker-local block cache (plans.block_cache): the kernel becomes a plain
-    grouped map over state+messages and fetches its CSR block locally —
-    the reference's load-once-compute-many shape.
 
     ``changed_only`` sends O(changed) boundary estimates per superstep
     instead of re-broadcasting the full boundary (the reference sends only
@@ -331,42 +332,15 @@ def _make_kernel(
     estimates are monotone non-increasing, so an unsent value is still the
     sender's current value."""
 
-    def passthrough(sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        """Quiescent-partition fast path (wake-on-message at partition
-        granularity, the reference's voteToHalt shape): at superstep ≥ 2 a
-        partition with no incoming kind-1 messages is already at local
-        h-index fixpoint — its previous superstep ran the local pass to
-        fixpoint against remote estimates that have not changed since
-        (estimates are monotone; only a message can lower a remote input).
-        Re-emit state (kind 0) and shadows (kind 3) verbatim with a
-        changed=0 marker: no CSR block load, no numpy pass, no sends. This
-        is what makes chain-overshoot steps and the narrow convergence
-        wavefront cheap."""
-        out = sm_pdf[sm_pdf["kind"].isin((0, 3))]
-        if len(out) == 0:  # defensive: a group always carries kind-0 state
+    def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(csr_pdf) == 0:
             return pd.DataFrame(columns=list(_EMPTY_OUT)).astype(_EMPTY_OUT)
-        part = np.int32(out["part"].iloc[0])
-        marker = pd.DataFrame(
-            {
-                "part": np.array([part], dtype=np.int32),
-                "kind": np.array([2], dtype=np.int32),
-                "vid": np.array([-1], dtype=np.int64),
-                "a": np.array([0], dtype=np.int64),
-                "payload": [None],
-            }
-        )
-        return pd.concat(
-            [out[["part", "kind", "vid", "a", "payload"]], marker],
-            ignore_index=True,
-        )
-
-    def quiescent(sm_pdf: pd.DataFrame) -> bool:
         # superstep 0 seeds, superstep 1 runs the first local pass (a
         # partition with no remote edges receives nothing but still must
         # compute once) — so the skip is only valid from superstep 2 on
-        return superstep >= 2 and not (sm_pdf["kind"] == 1).any()
-
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        if superstep >= 2 and not (sm_pdf["kind"] == 1).any():
+            return _passthrough(sm_pdf)
+        blk = CsrBlock(csr_pdf.iloc[0])
         n = blk.n_local
         deg = blk.out_degrees.astype(np.int64)
         if cap is not None:
@@ -481,38 +455,7 @@ def _make_kernel(
             )
         return out
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(columns=list(_EMPTY_OUT)).astype(_EMPTY_OUT)
-            if quiescent(sm_pdf):
-                return passthrough(sm_pdf)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        if quiescent(sm_pdf):
-            # the quiescent path needs nothing from the CSR block — skip the
-            # cache fetch entirely
-            return passthrough(sm_pdf)
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            # a state/seed/message row for this part implies its block was
-            # written — a silent empty return here would halt the loop with
-            # an EMPTY result on any cluster whose executors can't see
-            # blocks_path (ADVICE)
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def _hindex_loop(
@@ -520,23 +463,16 @@ def _hindex_loop(
     blocks: DataFrame,
     cap: int | None,
     max_iter: int,
-    blocks_path: str | None = None,
-    parts: list[int] | None = None,
     changed_only: bool = False,
     chain_every: int = 1,
     num_parts: int | None = None,
     consolidate_after: int | None = None,
-    consolidate_ok: bool = False,
+    consolidate_budget_bytes: int = 0,
 ) -> DataFrame:
     """Drive the kernel to global fixpoint; returns the final carry — kind-0
     state plus the fixpoint boundary channel (kind-1 messages; under
     ``changed_only`` also the kind-3 shadows, which together hold every
     boundary estimate — see :func:`_merge_boundary`). Callers filter kinds.
-
-    With ``blocks_path`` the loop runs in block-cache mode: supersteps are a
-    grouped map over state+messages only (kind=-1 seed rows bootstrap every
-    partition at superstep 0); blocks never re-enter the shuffle/Arrow
-    channel after the one-time write.
 
     ``chain_every`` runs that many supersteps lazily inside ONE Spark job,
     materializing (and reading the changed-count Observation) only at chain
@@ -547,16 +483,22 @@ def _hindex_loop(
     tail: once the observed changed-count drops below the partition count
     the wavefront is narrow and fixpoint is near, so the chain halves per
     round (VERDICT r3 #4) — long chains amortize the serial tax over the
-    bulk phase, short chains cap the no-op overshoot at the tail."""
+    bulk phase, short chains cap the no-op overshoot at the tail.
+
+    ``consolidate_after`` hands the tail to :func:`_make_consolidated_kernel`
+    after that many supersteps, provided the summed CSR block bytes fit
+    ``consolidate_budget_bytes``."""
     import os
     import time as _time
 
     _trace = bool(os.environ.get("GOFFISH_KCORE_TRACE"))
+    if consolidate_after is not None and consolidate_after < max_iter:
+        total_bytes = blocks.select(
+            F.sum(40 * F.col("n_edges") + 24 * F.col("n_local"))
+        ).first()[0]
+        if (total_bytes or 0) > consolidate_budget_bytes:
+            consolidate_after = None
     carry = spark.createDataFrame([], OUT_SCHEMA)
-    if blocks_path is not None:
-        seed = spark.createDataFrame(
-            [(int(p), -1, -1, 0, None) for p in parts], OUT_SCHEMA
-        )
     shrink_below = num_parts if num_parts is not None else 32
     cur_chain = chain_every
     step = 0
@@ -564,11 +506,7 @@ def _hindex_loop(
         while step < max_iter:
             _t0 = _time.monotonic()
             chain = max(1, min(cur_chain, max_iter - step))
-            if (
-                consolidate_ok
-                and consolidate_after is not None
-                and step < consolidate_after
-            ):
+            if consolidate_after is not None and step < consolidate_after:
                 # stop the chain exactly at the consolidation trigger: the
                 # distributed phase only needs to reach the hand-off point
                 # (budget-disabled runs keep full-length chains)
@@ -576,20 +514,12 @@ def _hindex_loop(
             mixed = carry
             out = None
             for j in range(chain):
-                i = step + j
-                kernel = _make_kernel(
-                    i, cap=cap, blocks_path=blocks_path, changed_only=changed_only
+                kernel = _make_kernel(step + j, cap=cap, changed_only=changed_only)
+                out = (
+                    blocks.groupby("part")
+                    .cogroup(mixed.groupby("part"))
+                    .applyInPandas(kernel, schema=OUT_SCHEMA)
                 )
-                if blocks_path is None:
-                    out = (
-                        blocks.groupby("part")
-                        .cogroup(mixed.groupby("part"))
-                        .applyInPandas(kernel, schema=OUT_SCHEMA)
-                    )
-                else:
-                    if i == 0:
-                        mixed = mixed.unionByName(seed)
-                    out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
                 if j < chain - 1:
                     mixed = out.filter(F.col("kind") != 2)
             # changed-count (of the chain's LAST step) rides the checkpoint
@@ -612,20 +542,20 @@ def _hindex_loop(
                 )
             if step >= 2 and changed == 0:
                 break
-            if (
-                consolidate_ok
-                and consolidate_after is not None
-                and step >= consolidate_after
-            ):
+            if consolidate_after is not None and step >= consolidate_after:
                 # tail consolidation: the distributed chains above ground the
                 # bulk value creep in parallel; the remaining cross-partition
                 # cascade (tens of ~0.5 s grouped-map waves for a trickle of
-                # changes) collapses into ONE merged-fixpoint task
-                fn = _make_consolidated_kernel(parts, blocks_path, cap)
+                # changes) collapses into ONE merged-fixpoint task, fed by a
+                # cogroup of every block with every kind-0 row under one key
+                one = F.lit(0).alias("_one")
                 carry = (
-                    carry.filter(F.col("kind") == 0)
-                    .repartition(1)
-                    .mapInPandas(fn, schema=OUT_SCHEMA)
+                    blocks.select("*", one)
+                    .groupby("_one")
+                    .cogroup(
+                        carry.filter(F.col("kind") == 0).select("*", one).groupby("_one")
+                    )
+                    .applyInPandas(_make_consolidated_kernel(cap), schema=OUT_SCHEMA)
                     .localCheckpoint(eager=True)
                 )
                 if _trace:
@@ -645,8 +575,6 @@ def core_numbers(
     edges: DataFrame,
     num_parts: int | None = None,
     max_iter: int = 1000,
-    cache_blocks: bool = True,
-    blocks_dir: str | None = None,
     changed_only: bool = True,
     chain_every: int = 8,
     consolidate_after: int = 2,
@@ -655,6 +583,11 @@ def core_numbers(
     """``(vid long, core long)`` for every vertex of the undirected simple
     graph induced by ``edges`` (self-loops ignored).
 
+    Every superstep cogroups the persisted CSR blocks with the state and
+    message rows by partition. ``changed_only`` (default) sends only
+    estimates that moved this superstep (KCore.java:101-109), with
+    receiver-side shadows of the last-received values.
+
     ``consolidate_after`` / ``consolidate_budget_bytes`` control tail
     consolidation (VERDICT r4 #2): after that many distributed supersteps,
     if the SUMMED CSR block bytes fit the budget, the remaining
@@ -662,53 +595,17 @@ def core_numbers(
     task (frontier-filtered sweeps) instead of tens more ~0.5 s grouped-map
     waves. The budget is what keeps this honest at scale: above it the
     distributed waves continue unchanged; below it the tail is provably a
-    single-task problem. Set ``consolidate_after=None``-equivalent by
-    passing a value ≥ ``max_iter`` to disable.
-
-    ``cache_blocks`` (default) writes the CSR blocks once and serves them
-    from the worker-local cache across the (many) global rounds of the full
-    decomposition, instead of re-shipping every block through Arrow each
-    superstep. ``blocks_dir`` points the block store at executor-visible
-    storage — REQUIRED on a multi-executor cluster (a driver-local tempdir
-    is only valid in local mode and is enforced in
-    plans.block_cache.resolve_blocks_dir); when given, the directory is kept
-    (it doubles as the block checkpoint). ``changed_only`` (default) sends
-    only estimates that moved this superstep (KCore.java:101-109), with
-    receiver-side shadows of the last-received values."""
+    single-task problem. ``consolidate_budget_bytes=0`` (or a
+    ``consolidate_after`` ≥ ``max_iter``) disables it; the answers are the
+    same either way."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts)
-    if cache_blocks:
-        import shutil
-
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        path, owned = resolve_blocks_dir(spark, blocks_dir)
-        try:
-            write_blocks(blocks, path)
-            stats = blocks.select("part", "n_local", "n_edges").collect()
-            parts = [r.part for r in stats]
-            total_bytes = sum(40 * r.n_edges + 24 * r.n_local for r in stats)
-            blocks.unpersist()
-            carry = _hindex_loop(
-                spark, blocks, cap=None, max_iter=max_iter,
-                blocks_path=path, parts=parts, changed_only=changed_only,
-                chain_every=chain_every, num_parts=num_parts,
-                consolidate_after=consolidate_after,
-                consolidate_ok=total_bytes <= consolidate_budget_bytes,
-            )
-            result = (
-                carry.filter(F.col("kind") == 0)
-                .select("vid", F.col("a").alias("core"))
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            if owned:
-                shutil.rmtree(path, ignore_errors=True)
-        return result
     carry = _hindex_loop(
         spark, blocks, cap=None, max_iter=max_iter, changed_only=changed_only,
         chain_every=chain_every, num_parts=num_parts,
+        consolidate_after=consolidate_after,
+        consolidate_budget_bytes=consolidate_budget_bytes,
     )
     result = (
         carry.filter(F.col("kind") == 0)
@@ -719,14 +616,17 @@ def core_numbers(
     return result
 
 
-def _make_finalize_kernel(cap: int, blocks_path: str | None = None):
+def _make_finalize_kernel(cap: int):
     """At fixpoint, est = min(core, cap): membership is est == cap. Induced
     degree = #neighbours with est == cap, computable in one pass because the
     boundary channel (fresh kind=1 messages over the kind=3 shadows — the
     first exchange is always full, so shadows cover every boundary vertex)
     carries every remote neighbour's fixpoint estimate."""
 
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(csr_pdf) == 0:
+            return pd.DataFrame(columns=list(_EMPTY_OUT)).astype(_EMPTY_OUT)
+        blk = CsrBlock(csr_pdf.iloc[0])
         n = blk.n_local
         state_rows = sm_pdf[sm_pdf["kind"] == 0]
         est = np.empty(n, dtype=np.int64)
@@ -765,28 +665,7 @@ def _make_finalize_kernel(cap: int, blocks_path: str | None = None):
             }
         )
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(columns=list(_EMPTY_OUT)).astype(_EMPTY_OUT)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def k_core(
@@ -794,8 +673,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     num_parts: int | None = None,
-    cache_blocks: bool = True,
-    blocks_dir: str | None = None,
     changed_only: bool = True,
     chain_every: int = 4,
     consolidate_after: int = 2,
@@ -813,54 +690,26 @@ def k_core(
 
     Execution shape (shared with :func:`core_numbers` — VERDICT r3 #2: this
     query had kept the round-1 plan while its sibling got the optimizations):
-    ``cache_blocks`` serves CSR blocks from the worker-local cache instead of
-    re-shipping them through Arrow every superstep; ``changed_only`` sends
-    only moved estimates (KCore.java:101-109) with receiver-side shadows;
+    CSR blocks cogrouped into every superstep, ``changed_only`` sends only
+    moved estimates (KCore.java:101-109) with receiver-side shadows,
     ``chain_every`` starts at 4 (the capped iteration needs only a handful
-    of rounds) and adapts down at the tail."""
+    of rounds) and adapts down at the tail, and the tail is consolidated
+    into one task under the same byte budget."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts)
-
-    def _finalize(carry: DataFrame, blocks_path: str | None) -> DataFrame:
-        fin = _make_finalize_kernel(k, blocks_path=blocks_path)
-        if blocks_path is None:
-            out = (
-                blocks.groupby("part")
-                .cogroup(carry.groupby("part"))
-                .applyInPandas(fin, schema=OUT_SCHEMA)
-            )
-        else:
-            out = carry.groupby("part").applyInPandas(fin, schema=OUT_SCHEMA)
-        return out.select("vid", F.col("a").alias("deg")).localCheckpoint(eager=True)
-
-    if cache_blocks:
-        import shutil
-
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        path, owned = resolve_blocks_dir(spark, blocks_dir)
-        try:
-            write_blocks(blocks, path)
-            stats = blocks.select("part", "n_local", "n_edges").collect()
-            parts = [r.part for r in stats]
-            total_bytes = sum(40 * r.n_edges + 24 * r.n_local for r in stats)
-            blocks.unpersist()
-            carry = _hindex_loop(
-                spark, blocks, cap=k, max_iter=1000, blocks_path=path,
-                parts=parts, changed_only=changed_only, chain_every=chain_every,
-                num_parts=num_parts,
-                consolidate_after=consolidate_after,
-                consolidate_ok=total_bytes <= consolidate_budget_bytes,
-            )
-            return _finalize(carry, path)
-        finally:
-            if owned:
-                shutil.rmtree(path, ignore_errors=True)
     carry = _hindex_loop(
         spark, blocks, cap=k, max_iter=1000, changed_only=changed_only,
         chain_every=chain_every, num_parts=num_parts,
+        consolidate_after=consolidate_after,
+        consolidate_budget_bytes=consolidate_budget_bytes,
     )
-    out = _finalize(carry, None)
+    out = (
+        blocks.groupby("part")
+        .cogroup(carry.groupby("part"))
+        .applyInPandas(_make_finalize_kernel(k), schema=OUT_SCHEMA)
+        .select("vid", F.col("a").alias("deg"))
+        .localCheckpoint(eager=True)
+    )
     blocks.unpersist()
     return out

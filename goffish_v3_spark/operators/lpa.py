@@ -194,9 +194,26 @@ def _local_mode_fixpoint(
 _LPA_EMPTY = {"part": "int32", "kind": "int32", "vid": "int64", "a": "int64"}
 
 
-def _make_lpa_kernel(
-    superstep: int, max_local_sweeps: int, blocks_path: str | None = None
-):
+def _passthrough(sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    """Re-emit state (kind 0), shadows (kind 3) and prev-prev labels
+    (kind 4) verbatim with a changed=0 marker — no block decode, no sweeps,
+    no sends."""
+    out = sm_pdf[sm_pdf["kind"].isin((0, 3, 4))]
+    if len(out) == 0:  # defensive: a group always carries kind-0 state
+        return pd.DataFrame(columns=list(_LPA_EMPTY)).astype(_LPA_EMPTY)
+    part = np.int32(out["part"].iloc[0])
+    marker = pd.DataFrame(
+        {
+            "part": np.array([part], dtype=np.int32),
+            "kind": np.array([2], dtype=np.int32),
+            "vid": np.array([-1], dtype=np.int64),
+            "a": np.array([0], dtype=np.int64),
+        }
+    )
+    return pd.concat([out[["part", "kind", "vid", "a"]], marker], ignore_index=True)
+
+
+def _make_lpa_kernel(superstep: int, max_local_sweeps: int):
     """One superstep: merge shadows+messages, run the block to local mode
     fixpoint, emit state (kind=0), changed-only boundary labels (kind=1),
     refreshed shadows (kind=3, routed to self), the superstep-start labels
@@ -214,48 +231,29 @@ def _make_lpa_kernel(
     vertex's end-of-superstep label equals its label two supersteps ago and
     differs from last superstep's, the pair {prev, current} is a 2-cycle:
     take the elementwise min — deterministic, phase-independent, and a
-    no-op on monotone trajectories.
+    no-op on monotone trajectories."""
 
-    ``blocks_path`` switches to the worker-local block cache
-    (plans.block_cache): plain grouped map over state+messages, block
-    fetched locally — the load-once-compute-many shape shared with
-    kcore/sssp_csr/csr_pagerank."""
-
-    def quiescent(sm_pdf: pd.DataFrame) -> bool:
-        """Partition-level wake-on-message (the reference's voteToHalt
-        shape, mirroring kcore's passthrough): skip the block fetch and the
-        mode-fixpoint when (a) no fresh boundary labels arrived AND (b) the
-        partition's own previous superstep reported changed == 0 — its
-        kind-2 row rides the carry back to itself. (b) is required here,
-        unlike kcore: the cross-block cycle damper can rewrite labels AFTER
-        the local fixpoint, so a no-message partition with changed > 0 may
-        not be at a re-runnable fixpoint yet. With changed == 0 the damper
-        provably did not fire (it requires label != prev) and the persisted
-        state is a verified mode fixpoint, so a re-run would emit exactly
-        these rows."""
-        if superstep == 0 or (sm_pdf["kind"] == 1).any():
-            return False
-        pc = sm_pdf[sm_pdf["kind"] == 2]
-        return len(pc) > 0 and int(pc["a"].iloc[0]) == 0
-
-    def passthrough(sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = sm_pdf[sm_pdf["kind"].isin((0, 3, 4))]
-        if len(out) == 0:  # defensive: a group always carries kind-0 state
-            return pd.DataFrame(columns=list(_LPA_EMPTY)).astype(_LPA_EMPTY)
-        part = np.int32(out["part"].iloc[0])
-        marker = pd.DataFrame(
-            {
-                "part": np.array([part], dtype=np.int32),
-                "kind": np.array([2], dtype=np.int32),
-                "vid": np.array([-1], dtype=np.int64),
-                "a": np.array([0], dtype=np.int64),
-            }
-        )
-        return pd.concat(
-            [out[["part", "kind", "vid", "a"]], marker], ignore_index=True
-        )
-
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(csr_pdf) == 0:
+            return pd.DataFrame(
+                {"part": [], "kind": [], "vid": [], "a": []}
+            ).astype(_LPA_EMPTY)
+        # Partition-level wake-on-message (the reference's voteToHalt shape,
+        # mirroring kcore's passthrough): skip the mode-fixpoint when (a) no
+        # fresh boundary labels arrived AND (b) the partition's own previous
+        # superstep reported changed == 0 — its kind-2 row rides the carry
+        # back to itself. (b) is required here, unlike kcore: the
+        # cross-block cycle damper can rewrite labels AFTER the local
+        # fixpoint, so a no-message partition with changed > 0 may not be
+        # at a re-runnable fixpoint yet. With changed == 0 the damper
+        # provably did not fire (it requires label != prev) and the
+        # persisted state is a verified mode fixpoint, so a re-run would
+        # emit exactly these rows.
+        if superstep > 0 and not (sm_pdf["kind"] == 1).any():
+            pc = sm_pdf[sm_pdf["kind"] == 2]
+            if len(pc) > 0 and int(pc["a"].iloc[0]) == 0:
+                return _passthrough(sm_pdf)
+        blk = CsrBlock(csr_pdf.iloc[0])
         n = blk.n_local
         seg = np.repeat(np.arange(n, dtype=np.int64), blk.out_degrees)
         remote_mask = blk.edge_dst_local < 0
@@ -373,35 +371,7 @@ def _make_lpa_kernel(
             }
         )
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(
-                    {"part": [], "kind": [], "vid": [], "a": []}
-                ).astype(_LPA_EMPTY)
-            if quiescent(sm_pdf):
-                return passthrough(sm_pdf)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        if quiescent(sm_pdf):
-            # nothing needed from the CSR block — skip the cache fetch
-            return passthrough(sm_pdf)
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def lpa_csr(
@@ -411,8 +381,6 @@ def lpa_csr(
     max_iter: int = 30,
     max_local_sweeps: int = 10_000,
     part_expr=None,
-    cache_blocks: bool = False,
-    blocks_dir: str | None = None,
 ) -> DataFrame:
     """Subgraph-centric LPA: each superstep runs mode-propagation to local
     fixpoint inside every CSR block (remote labels pinned at their
@@ -441,56 +409,32 @@ def lpa_csr(
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts, part_expr=part_expr)
 
-    blocks_path, owned, seed = None, False, None
-    if cache_blocks:
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        blocks_path, owned = resolve_blocks_dir(spark, blocks_dir, prefix="goffish_lpa_")
-        write_blocks(blocks, blocks_path)
-        parts = [r.part for r in blocks.select("part").collect()]
-        blocks.unpersist()
-        seed = spark.createDataFrame(
-            [(int(p), -1, -1, 0) for p in parts], LPA_SCHEMA
-        )
-
     carry = spark.createDataFrame([], LPA_SCHEMA)
     supersteps = 0
-    try:
-        with no_aqe(spark):
-            for i in range(max_iter):
-                kernel = _make_lpa_kernel(i, max_local_sweeps, blocks_path=blocks_path)
-                if blocks_path is not None:
-                    mixed = carry.unionByName(seed) if i == 0 else carry
-                    out = mixed.groupby("part").applyInPandas(kernel, schema=LPA_SCHEMA)
-                else:
-                    out = (
-                        blocks.groupby("part")
-                        .cogroup(carry.groupby("part"))
-                        .applyInPandas(kernel, schema=LPA_SCHEMA)
-                    )
-                obs = Observation(f"lpa_csr_step_{i}")
-                out = out.observe(
-                    obs, F.sum(F.when(F.col("kind") == 2, F.col("a"))).alias("changed")
-                ).localCheckpoint(eager=True)
-                # kind-2 rows stay in the carry: each partition's changed
-                # count rides back to itself so the kernel's quiescent check
-                # can prove its state is a re-runnable fixpoint (1 row/part)
-                carry = out
-                supersteps = i + 1
-                if int(obs.get["changed"] or 0) == 0:
-                    break
+    with no_aqe(spark):
+        for i in range(max_iter):
+            out = (
+                blocks.groupby("part")
+                .cogroup(carry.groupby("part"))
+                .applyInPandas(_make_lpa_kernel(i, max_local_sweeps), schema=LPA_SCHEMA)
+            )
+            obs = Observation(f"lpa_csr_step_{i}")
+            out = out.observe(
+                obs, F.sum(F.when(F.col("kind") == 2, F.col("a"))).alias("changed")
+            ).localCheckpoint(eager=True)
+            # kind-2 rows stay in the carry: each partition's changed
+            # count rides back to itself so the kernel's quiescent check
+            # can prove its state is a re-runnable fixpoint (1 row/part)
+            carry = out
+            supersteps = i + 1
+            if int(obs.get["changed"] or 0) == 0:
+                break
 
-        result = (
-            carry.filter(F.col("kind") == 0)
-            .select("vid", F.col("a").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        if owned:
-            import shutil
-
-            shutil.rmtree(blocks_path, ignore_errors=True)
+    result = (
+        carry.filter(F.col("kind") == 0)
+        .select("vid", F.col("a").alias("label"))
+        .localCheckpoint(eager=True)
+    )
     result.lpa_supersteps = supersteps
-    if not cache_blocks:
-        blocks.unpersist()
+    blocks.unpersist()
     return result

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 from .sampling import MOD, bucket_sql, hash_bucket
 
@@ -27,11 +28,22 @@ def _check_integral_key(df: DataFrame, key_col: str, op: str) -> None:
     """Every sketch here mixes the key arithmetically; a silent
     cast("long") on a string column yields NULL hashes and a quietly
     wrong sketch. Raise loudly instead (map string keys to ids first,
-    e.g. via xxhash64 — or polyhash for an oracle-replayable mapping)."""
-    t = df.schema[key_col].dataType.typeName()
+    e.g. via xxhash64 — or polyhash for an oracle-replayable mapping).
+    Integer types and scale-0 decimals are accepted; a decimal value
+    outside the long range fails its ANSI cast rather than wrapping."""
+    if key_col not in df.columns:
+        raise ValueError(
+            f"{op}: key column {key_col!r} is not a top-level column of the "
+            f"input (columns: {df.columns}); pass a plain column name, not an "
+            "expression"
+        )
+    dt = df.schema[key_col].dataType
+    if isinstance(dt, DecimalType) and dt.scale == 0:
+        return
+    t = dt.typeName()
     if t not in ("long", "integer", "short", "byte"):
         raise TypeError(
-            f"{op} needs an integral key column; {key_col!r} is {t} - "
+            f"{op} needs an integral key column; {key_col!r} is {dt.simpleString()} - "
             "map keys to ids first"
         )
 

@@ -91,20 +91,20 @@ def sssp(
 _SSSP_EMPTY = {"part": "int32", "kind": "int32", "vid": "int64", "d": "f8", "p": "int64"}
 
 
-def _make_sssp_kernel(superstep: int, source: int, blocks_path: str | None = None):
+def _make_sssp_kernel(superstep: int, source: int):
     """One superstep of subgraph-centric SSSP: apply inbound boundary
     candidates, relax the partition-local subgraph **to convergence**
     (vectorized frontier Bellman-Ford sweeps over the local CSR — the
     reference's per-superstep full local search, SingleSourceShortestPath.
     java:407-536 ``aStar``), then emit min-combined boundary candidates from
-    changed vertices only (:350-376's changed-roots bundling).
+    changed vertices only (:350-376's changed-roots bundling)."""
 
-    ``blocks_path`` switches to the worker-local block cache
-    (plans.block_cache): the kernel becomes a plain grouped map over
-    state+messages and fetches its CSR block locally — the reference's
-    load-once-compute-many shape (GraphJobRunner.java:105-126)."""
-
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(csr_pdf) == 0:
+            return pd.DataFrame(
+                {"part": [], "kind": [], "vid": [], "d": [], "p": []}
+            ).astype(_SSSP_EMPTY)
+        blk = CsrBlock(csr_pdf.iloc[0])
         n = blk.n_local
 
         if superstep == 0:
@@ -224,33 +224,7 @@ def _make_sssp_kernel(superstep: int, source: int, blocks_path: str | None = Non
             }
         )
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(
-                    {"part": [], "kind": [], "vid": [], "d": [], "p": []}
-                ).astype(_SSSP_EMPTY)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            # state/seed rows imply the block was written; a silent empty
-            # return would end the loop with a WRONG (partial) result on any
-            # cluster whose executors can't see blocks_path
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def sssp_csr(
@@ -262,8 +236,6 @@ def sssp_csr(
     num_parts: int | None = None,
     max_iter: int = 10_000,
     part_expr=None,
-    cache_blocks: bool = False,
-    blocks_dir: str | None = None,
 ) -> DataFrame:
     """Subgraph-centric SSSP over partition-local CSR blocks — the P3
     superstep-collapsing engine. Returns ``(vid, dist, parent)`` with the
@@ -274,12 +246,8 @@ def sssp_csr(
     buckets, k-means growth — the METIS analogue) a diameter-10³ road
     network needs O(meta-diameter) rounds where the DataFrame Bellman-Ford
     needs 10³ (reference rationale: SingleSourceShortestPath.java:407-536).
-
-    ``cache_blocks`` serves CSR blocks from the worker-local cache
-    (plans.block_cache, the load-once-compute-many shape) instead of
-    re-shipping them through Arrow every superstep; ``blocks_dir`` points the
-    block store at executor-visible storage — REQUIRED on a multi-executor
-    cluster (enforced by resolve_blocks_dir).
+    Every superstep cogroups the persisted CSR blocks with the state and
+    message rows by partition.
     """
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -290,60 +258,32 @@ def sssp_csr(
         )
     blocks = build_csr_blocks(spark, e, num_parts, part_expr=part_expr)
 
-    blocks_path, owned, seed = None, False, None
-    if cache_blocks:
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        blocks_path, owned = resolve_blocks_dir(spark, blocks_dir, prefix="goffish_sssp_")
-        write_blocks(blocks, blocks_path)
-        parts = [r.part for r in blocks.select("part").collect()]
-        blocks.unpersist()
-        # kind=-1 seed rows bootstrap every partition at superstep 0 (no
-        # state exists yet and grouped-map has no block side to enumerate)
-        seed = spark.createDataFrame(
-            [(int(p), -1, -1, 0.0, 0) for p in parts], SSSP_SCHEMA
-        )
-
     state = spark.createDataFrame([], SSSP_SCHEMA)
     msgs = spark.createDataFrame([], SSSP_SCHEMA)
     supersteps = 0
-    try:
-        with no_aqe(spark):
-            for i in range(max_iter):
-                kernel = _make_sssp_kernel(i, source, blocks_path=blocks_path)
-                mixed = state.unionByName(msgs)
-                if blocks_path is not None:
-                    if i == 0:
-                        mixed = mixed.unionByName(seed)
-                    out = mixed.groupby("part").applyInPandas(kernel, schema=SSSP_SCHEMA)
-                else:
-                    out = (
-                        blocks.groupby("part")
-                        .cogroup(mixed.groupby("part"))
-                        .applyInPandas(kernel, schema=SSSP_SCHEMA)
-                    )
-                obs = Observation(f"sssp_csr_step_{i}")
-                out = out.observe(
-                    obs, F.sum(F.when(F.col("kind") == 2, F.col("p"))).alias("improved")
-                ).localCheckpoint(eager=True)
-                state = out.filter(F.col("kind") == 0)
-                msgs = out.filter(F.col("kind") == 1)
-                supersteps = i + 1
-                if int(obs.get["improved"] or 0) == 0:
-                    break
+    with no_aqe(spark):
+        for i in range(max_iter):
+            out = (
+                blocks.groupby("part")
+                .cogroup(state.unionByName(msgs).groupby("part"))
+                .applyInPandas(_make_sssp_kernel(i, source), schema=SSSP_SCHEMA)
+            )
+            obs = Observation(f"sssp_csr_step_{i}")
+            out = out.observe(
+                obs, F.sum(F.when(F.col("kind") == 2, F.col("p"))).alias("improved")
+            ).localCheckpoint(eager=True)
+            state = out.filter(F.col("kind") == 0)
+            msgs = out.filter(F.col("kind") == 1)
+            supersteps = i + 1
+            if int(obs.get["improved"] or 0) == 0:
+                break
 
-        result = (
-            state.select("vid", F.col("d").alias("dist"), F.col("p").alias("parent"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        if owned:
-            import shutil
-
-            shutil.rmtree(blocks_path, ignore_errors=True)
+    result = (
+        state.select("vid", F.col("d").alias("dist"), F.col("p").alias("parent"))
+        .localCheckpoint(eager=True)
+    )
     result.sssp_supersteps = supersteps  # introspection for tests/bench
-    if not cache_blocks:
-        blocks.unpersist()
+    blocks.unpersist()
     return result
 
 

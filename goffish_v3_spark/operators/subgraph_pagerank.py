@@ -82,9 +82,13 @@ def _make_kernel(
     local_init: bool = False,
     local_eps: float = 0.05,
     n_total: int | None = None,
-    blocks_path: str | None = None,
 ):
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(csr_pdf) == 0:
+            return pd.DataFrame(
+                {"part": [], "kind": [], "vid": [], "a": [], "b": []}
+            ).astype(_PR_EMPTY)
+        blk = CsrBlock(csr_pdf.iloc[0])
         n_local = blk.n_local
 
         state_rows = sm_pdf[sm_pdf["kind"] == 0]
@@ -172,33 +176,7 @@ def _make_kernel(
             }
         )
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(
-                    {"part": [], "kind": [], "vid": [], "a": [], "b": []}
-                ).astype(_PR_EMPTY)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            # every partition has state rows (init_rows seeds them all), so a
-            # missing block means executors can't see blocks_path — raise
-            # instead of silently dropping the partition's ranks
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def csr_pagerank(
@@ -212,8 +190,6 @@ def csr_pagerank(
     fixed_iterations: int | None = None,
     local_init: bool = False,
     local_eps: float = 0.05,
-    cache_blocks: bool = False,
-    blocks_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over CSR blocks; returns ``(vid long, rank double)`` equal to
     operators.pagerank within float tolerance (same update order).
@@ -223,12 +199,8 @@ def csr_pagerank(
     warm start: PageRank over each partition's local edges to ``local_eps``
     convergence before the first global superstep (SubgraphRank.java:117-143)
     — the superstep-saving inner loop; the global phase still converges to
-    the plain PageRank fixpoint.
-
-    ``cache_blocks`` serves CSR blocks from the worker-local cache
-    (plans.block_cache) so supersteps re-ship only state+messages, not the
-    adjacency; ``blocks_dir`` must point at executor-visible storage on a
-    multi-executor cluster (enforced by resolve_blocks_dir)."""
+    the plain PageRank fixpoint. Every superstep cogroups the persisted CSR
+    blocks with the state and message rows by partition."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     own_blocks = blocks is None
@@ -261,33 +233,15 @@ def csr_pagerank(
     state = blocks.mapInPandas(init_rows, schema=OUT_SCHEMA).localCheckpoint(eager=True)
     msgs = spark.createDataFrame([], "part int, kind int, vid long, a double, b double")
 
-    blocks_path, owned = None, False
-    if cache_blocks:
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        blocks_path, owned = resolve_blocks_dir(spark, blocks_dir, prefix="goffish_pr_")
-        write_blocks(blocks, blocks_path)
-        if own_blocks:
-            blocks.unpersist()
-
-    try:
-        with no_aqe(spark):
-            state, supersteps = _csr_loop(
-                blocks, state, msgs, alpha, base, eps, max_iter,
-                fixed_iterations=fixed_iterations,
-                local_init=local_init, local_eps=local_eps, n_total=n,
-                blocks_path=blocks_path,
-            )
-
-        result = state.select("vid", F.col("a").alias("rank"))
-        result = result.localCheckpoint(eager=True)
-    finally:
-        if owned:
-            import shutil
-
-            shutil.rmtree(blocks_path, ignore_errors=True)
+    with no_aqe(spark):
+        state, supersteps = _csr_loop(
+            blocks, state, msgs, alpha, base, eps, max_iter,
+            fixed_iterations=fixed_iterations,
+            local_init=local_init, local_eps=local_eps, n_total=n,
+        )
+    result = state.select("vid", F.col("a").alias("rank")).localCheckpoint(eager=True)
     result.pr_supersteps = supersteps  # introspection for tests/bench
-    if own_blocks and not cache_blocks:
+    if own_blocks:
         blocks.unpersist()
     return result
 
@@ -302,25 +256,18 @@ def subgraph_rank(spark: SparkSession, edges: DataFrame, **kw) -> DataFrame:
 def _csr_loop(
     blocks, state, msgs, alpha, base, eps, max_iter,
     fixed_iterations=None, local_init=False, local_eps=0.05, n_total=None,
-    blocks_path=None,
 ):
     total = max_iter if fixed_iterations is None else fixed_iterations + 1
     i = 0
     for i in range(total):
         kernel = _make_kernel(
             i, alpha, base, local_init=local_init, local_eps=local_eps, n_total=n_total,
-            blocks_path=blocks_path,
         )
-        mixed = state.unionByName(msgs)
-        if blocks_path is not None:
-            # every part already has state rows (init_rows), no seeds needed
-            out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
-        else:
-            out = (
-                blocks.groupby("part")
-                .cogroup(mixed.groupby("part"))
-                .applyInPandas(kernel, schema=OUT_SCHEMA)
-            )
+        out = (
+            blocks.groupby("part")
+            .cogroup(state.unionByName(msgs).groupby("part"))
+            .applyInPandas(kernel, schema=OUT_SCHEMA)
+        )
         # the ε-gate's max-delta rides the checkpoint materialization as an
         # Observation — ONE Spark job per superstep (the kcore/sssp pattern),
         # not a second collect() job over the kind=2 rows

@@ -105,8 +105,6 @@ def _hash_min_fixpoint(spark: SparkSession, meta_edges: DataFrame, max_iter: int
 
 
 def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
-    prev_sum = None
-
     for i in range(max_iter):
         neigh_min = (
             sym.join(mapping, sym.b == mapping.label)
@@ -118,6 +116,7 @@ def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
             .select(
                 "label",
                 F.least(F.col("root"), F.coalesce(F.col("nmin"), F.col("root"))).alias("root"),
+                F.col("root").alias("old_root"),
             )
         )
         # pointer jumping: root := root's root
@@ -130,18 +129,20 @@ def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
         ).select(
             F.col("m1.label").alias("label"),
             F.coalesce(F.col("r_root"), F.col("m1.root")).alias("root"),
+            F.col("m1.old_root").alias("old_root"),
         )
-        # roots only ever decrease (min-propagation), so the root-sum is a
-        # strictly-decreasing convergence witness — observed during the
-        # lineage-truncating materialization: ONE job per round, no separate
-        # agg job (the repo-wide Observation-on-checkpoint pattern)
+        # convergence witness: how many labels' roots moved this round — an
+        # exact count, so it cannot overflow the way a sum of 64-bit vids
+        # does under ANSI arithmetic. Observed during the lineage-truncating
+        # materialization: ONE job per round, no separate agg job (the
+        # repo-wide Observation-on-checkpoint pattern)
         obs = Observation(f"wcc_min_round_{i}")
-        m2 = m2.observe(obs, F.sum("root").alias("s")).localCheckpoint(eager=True)
-        new_sum = obs.get["s"]
-        mapping = m2
-        if new_sum == prev_sum:
+        m2 = m2.observe(
+            obs, F.count(F.when(F.col("root") != F.col("old_root"), 1)).alias("moved")
+        ).localCheckpoint(eager=True)
+        mapping = m2.select("label", "root")
+        if obs.get["moved"] == 0:
             break
-        prev_sum = new_sum
     return mapping
 
 

@@ -7,11 +7,11 @@ executor-side Python workers — is the package zip shipped through
 ``spark-submit --py-files``). Executors run in SEPARATE JVM processes under
 ``local-cluster[2,8,4096]``, so this exercises every cross-process surface
 the single-JVM ``local[32]`` rounds never could: zip import in workers,
-Arrow applyInPandas against shipped code, worker-local CSR block cache reads
-from an explicit ``blocks_dir``, and a checkpoint/resume cycle whose state
-parquet is written by executor processes.
+Arrow applyInPandas against shipped code, cogrouped CSR supersteps that need
+no storage shared between executors, and a checkpoint/resume cycle whose
+state parquet is written by executor processes.
 
-Usage: python _local_cluster_child.py <pyfiles.zip> <blocks_dir> <ckpt_dir> <out.json>
+Usage: python _local_cluster_child.py <pyfiles.zip> <ckpt_dir> <out.json>
 """
 
 import json
@@ -20,7 +20,7 @@ import sys
 
 
 def main() -> None:
-    zip_path, blocks_dir, ckpt_dir, out_path = sys.argv[1:5]
+    zip_path, ckpt_dir, out_path = sys.argv[1:4]
     assert not any("goffish" in p for p in sys.path), sys.path
 
     from pyspark.sql import SparkSession
@@ -62,16 +62,9 @@ def main() -> None:
         F.lit(1.0).alias("w"),
     )
 
-    # CSR cache-mode kernel: blocks written to the explicit shared dir,
-    # fetched by executor-side Python workers through plans.block_cache
-    ranks = csr_pagerank(
-        spark,
-        edges,
-        num_parts=8,
-        fixed_iterations=6,
-        cache_blocks=True,
-        blocks_dir=blocks_dir,
-    ).collect()
+    # CSR blocks travel to executor-side Python workers through the
+    # superstep cogroup itself; no block directory is shared between them
+    ranks = csr_pagerank(spark, edges, num_parts=8, fixed_iterations=6).collect()
 
     # checkpoint/resume cycle across executor-written state parquet
     full, _ = pagerank_with_info(spark, edges, fixed_iterations=7)

@@ -64,3 +64,16 @@ def to_df(spark, edges, weighted=False):
     else:
         rows = [(int(u), int(v), 1.0) for u, v in edges]
     return spark.createDataFrame(rows, "src long, dst long, w double")
+
+
+def undecodable_csr(part: int):
+    """A one-row CSR block frame whose binary cells are not whole numpy
+    arrays: a kernel that decodes it (``CsrBlock``) raises ``ValueError``,
+    so a kernel that returns without raising provably never touched it."""
+    import pandas as pd
+
+    cols = ("local_vids", "indptr", "edge_dst_vid", "edge_dst_part",
+            "edge_dst_local", "edge_w")
+    return pd.DataFrame(
+        {"part": [part], "n_local": [1], "n_edges": [1], **{c: [b"abc"] for c in cols}}
+    )

@@ -79,3 +79,12 @@ def test_param_validation(spark, frames):
         bloom_prefilter(
             fact.withColumn("h1", F.lit(0)), "fk", dim.toDF("pos"), m=64, k=2
         )
+
+
+def test_prefilter_rejects_mismatched_params(spark, frames):
+    dim, fact = frames
+    bits = bloom_bits(dim, "key", m=1024, k=3, seed=0)
+    with pytest.raises(Exception, match="bits built with m=1024, k=3, seed=0"):
+        bloom_prefilter(fact, "fk", bits, m=1024, k=2, seed=0).count()
+    with pytest.raises(ValueError, match="pos, m, k, seed"):
+        bloom_prefilter(fact, "fk", bits.select("pos"), m=1024, k=3, seed=0)

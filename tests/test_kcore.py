@@ -32,44 +32,44 @@ def test_ba_vs_oracle(spark):
     assert got == kcore_oracle(edges)
 
 
-def test_core_numbers_block_cache_mode_matches(spark):
-    """Worker-local block-cache execution (load-once-compute-many) returns
-    the same core numbers as cogrouped block shipping."""
-    from goffish_v3_spark.operators.kcore import core_numbers
-    from tests import graphs
+def test_core_numbers_consolidation_on_off_match(spark, monkeypatch):
+    """Tail consolidation on the cogroup path (blocks fed to the one merged
+    task by a one-group cogroup) gives the same core numbers as the purely
+    distributed rounds with consolidation disabled by a zero byte budget —
+    and the default run really takes the consolidated branch."""
+    from goffish_v3_spark.operators import kcore
 
-    df = graphs.to_df(spark, graphs.barabasi_albert(250, m=4, seed=13))
-    a = {r.vid: r.core for r in core_numbers(spark, df, num_parts=4, cache_blocks=False).collect()}
-    b = {r.vid: r.core for r in core_numbers(spark, df, num_parts=4, cache_blocks=True).collect()}
-    assert a == b
+    calls = []
+    real = kcore._make_consolidated_kernel
 
+    def spy(cap):
+        calls.append(cap)
+        return real(cap)
 
-def test_block_cache_reused_dir_not_stale(spark, tmp_path):
-    """Re-running into the SAME blocks_dir with a DIFFERENT graph must not
-    serve the first graph's cached blocks from long-lived Python workers
-    (cache key includes the block file's freshness token)."""
-    from goffish_v3_spark.operators.kcore import core_numbers
-    from tests.oracles import kcore_oracle as core_numbers_oracle
-
-    d = str(tmp_path / "shared_blocks")
-    g1 = graphs.clique(6)
-    g2 = graphs.disjoint_cliques(3, 4)
-    df1, df2 = graphs.to_df(spark, g1), graphs.to_df(spark, g2)
-    a = {r.vid: r.core for r in core_numbers(spark, df1, num_parts=4, blocks_dir=d).collect()}
-    b = {r.vid: r.core for r in core_numbers(spark, df2, num_parts=4, blocks_dir=d).collect()}
-    assert a == core_numbers_oracle(g1)
-    assert b == core_numbers_oracle(g2)
+    monkeypatch.setattr(kcore, "_make_consolidated_kernel", spy)
+    edges = graphs.barabasi_albert(250, m=4, seed=13)
+    df = graphs.to_df(spark, edges)
+    on = {r.vid: r.core for r in core_numbers(spark, df, num_parts=4).collect()}
+    assert calls == [None]
+    off = {
+        r.vid: r.core
+        for r in core_numbers(
+            spark, df, num_parts=4, consolidate_budget_bytes=0
+        ).collect()
+    }
+    assert calls == [None]
+    assert on == off == kcore_oracle(edges)
 
 
 def test_k_core_changed_only_vs_full_messaging(spark):
-    """k_core's changed-only + cached execution (r4) matches the full
-    re-broadcast cogroup path on a hub-ish graph."""
+    """k_core's changed-only messaging (r4) matches the full re-broadcast
+    path on a hub-ish graph."""
     edges = graphs.barabasi_albert(200, m=3, seed=5)
     df = graphs.to_df(spark, edges)
     a = {
         (r.vid, r.deg)
         for r in k_core(
-            spark, df, k=3, num_parts=4, cache_blocks=False, changed_only=False,
+            spark, df, k=3, num_parts=4, changed_only=False,
             chain_every=1,
         ).collect()
     }
@@ -77,45 +77,27 @@ def test_k_core_changed_only_vs_full_messaging(spark):
     assert a == b
 
 
-def test_block_cache_rejects_multi_file_part(spark, tmp_path):
-    """>1 parquet file under one part= dir (duplicate part row / partial
-    overwrite) must raise, not silently serve an arbitrary file (ADVICE r3)."""
-    import glob
-    import shutil
-
-    import pytest
-
-    from goffish_v3_spark.plans.block_cache import clear_cache, load_block, write_blocks
-    from goffish_v3_spark.plans.csr import build_csr_blocks_sym
-
-    d = str(tmp_path / "blocks")
-    blocks = build_csr_blocks_sym(spark, graphs.to_df(spark, graphs.clique(5)), 2)
-    write_blocks(blocks, d)
-    blocks.unpersist()
-    clear_cache()
-    part_dirs = sorted(glob.glob(f"{d}/part=*"))
-    assert part_dirs, "no part dirs written"
-    files = glob.glob(f"{part_dirs[0]}/*.parquet")
-    assert len(files) == 1
-    part = int(part_dirs[0].rsplit("=", 1)[1])
-    assert load_block(d, part) is not None
-    shutil.copy(files[0], files[0].replace(".parquet", "_dup.parquet"))
-    clear_cache()
-    with pytest.raises(RuntimeError, match="corrupt"):
-        load_block(d, part)
-
 def test_quiescent_partition_passthrough_skips_block():
     """A partition with no incoming kind-1 messages at superstep ≥ 2 must be
-    served by the verbatim passthrough — proven by the cached kernel NOT
-    touching its CSR block (a nonexistent blocks_path would raise)."""
+    served by the verbatim passthrough — proven by the cogroup kernel NOT
+    decoding its CSR block (the block's binary cells are not whole int64
+    arrays, so decoding them would raise)."""
     import numpy as np
     import pandas as pd
+    import pytest
 
-    from goffish_v3_spark.operators.kcore import _make_kernel
+    from goffish_v3_spark.operators.kcore import (
+        _make_kernel,
+        _pack_shadow,
+        _unpack_shadow,
+    )
+    from goffish_v3_spark.plans.csr import CsrBlock
 
-    from goffish_v3_spark.operators.kcore import _pack_shadow, _unpack_shadow
+    bad_csr = graphs.undecodable_csr(1)
+    with pytest.raises(ValueError):
+        CsrBlock(bad_csr.iloc[0])
 
-    kernel = _make_kernel(2, blocks_path="/nonexistent/blocks", changed_only=True)
+    kernel = _make_kernel(2, changed_only=True)
     packed = _pack_shadow(
         np.array([20, 21], dtype=np.int64), np.array([1, 4], dtype=np.int64)
     )
@@ -128,7 +110,7 @@ def test_quiescent_partition_passthrough_skips_block():
             "payload": [None, None, packed],
         }
     )
-    out = kernel((1,), sm)
+    out = kernel((1,), bad_csr, sm)
     state = out[out["kind"] == 0].sort_values("vid")
     assert list(state["vid"]) == [10, 11] and list(state["a"]) == [2, 3]
     shadows = out[out["kind"] == 3]
@@ -141,10 +123,8 @@ def test_quiescent_partition_passthrough_skips_block():
     assert len(marker) == 1 and int(marker["a"].iloc[0]) == 0
     assert not (out["kind"] == 1).any()  # quiescent partitions send nothing
 
-    # a kind-1 message wakes the partition: the kernel now needs its block,
-    # and with a bogus path that must raise (i.e. passthrough NOT taken)
-    import pytest
-
+    # a kind-1 message wakes the partition: the kernel now decodes its
+    # block, which must raise (i.e. passthrough NOT taken)
     awake = pd.concat(
         [sm, pd.DataFrame({"part": np.array([1], dtype=np.int32),
                            "kind": np.array([1], dtype=np.int32),
@@ -152,14 +132,13 @@ def test_quiescent_partition_passthrough_skips_block():
                            "a": np.array([1], dtype=np.int64)})],
         ignore_index=True,
     )
-    with pytest.raises(Exception):
-        kernel((1,), awake)
+    with pytest.raises(ValueError):
+        kernel((1,), bad_csr, awake)
 
     # superstep 1 must never take the passthrough even without messages
     # (a no-remote-edge partition still owes its first local pass)
-    kernel1 = _make_kernel(1, blocks_path="/nonexistent/blocks", changed_only=True)
-    with pytest.raises(Exception):
-        kernel1((1,), sm)
+    with pytest.raises(ValueError):
+        _make_kernel(1, changed_only=True)((1,), bad_csr, sm)
 
 
 def test_tail_consolidation_matches_distributed(spark):

@@ -1,5 +1,6 @@
 """Multi-process execution smoke (VERDICT r4 #3): the cluster-facing claims
-(--py-files zip packaging, explicit blocks_dir block cache, checkpoint/resume)
+(--py-files zip packaging, CSR cogroup supersteps with no shared block
+storage, checkpoint/resume)
 verified with executors in SEPARATE JVM processes via ``local-cluster[2,8,4096]``
 — the cheapest honest test that the engine survives leaving one JVM.
 
@@ -23,19 +24,18 @@ CHILD = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_local_cluster
     not os.environ.get("GOFFISH_NIGHTLY"),
     reason="multi-process local-cluster smoke; set GOFFISH_NIGHTLY=1",
 )
-def test_local_cluster_pyfiles_blockcache_resume(spark, tmp_path):
+def test_local_cluster_pyfiles_csr_resume(spark, tmp_path):
     from tools.package_pyfiles import build_zip
 
     zip_path = str(tmp_path / "goffish_v3_spark.zip")
     names = build_zip(zip_path)
-    assert any(n.endswith("block_cache.py") for n in names)
+    assert any(n.endswith("plans/csr.py") for n in names)
 
     out_path = str(tmp_path / "out.json")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
         [
-            sys.executable, CHILD, zip_path,
-            str(tmp_path / "blocks"), str(tmp_path / "ckpt"), out_path,
+            sys.executable, CHILD, zip_path, str(tmp_path / "ckpt"), out_path,
         ],
         cwd=str(tmp_path),  # neutral cwd: repo NOT importable except via zip
         env=env,
@@ -56,7 +56,8 @@ def test_local_cluster_pyfiles_blockcache_resume(spark, tmp_path):
     assert got["resumed_supersteps"] == 4  # 7 - 3: continued, not restarted
     assert got["resume_max_delta"] <= 1e-12
 
-    # CSR cache-mode ranks match the same kernel in this (single-JVM) session
+    # CSR ranks computed across executor processes match this (single-JVM)
+    # session
     from goffish_v3_spark.operators.subgraph_pagerank import csr_pagerank
 
     edges = spark.range(6000).select(

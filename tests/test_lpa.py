@@ -118,34 +118,20 @@ def test_csr_superstep_collapse_on_anchored_chain(spark):
     assert res.lpa_supersteps <= parts + 2, res.lpa_supersteps
 
 
-def test_csr_block_cache_mode_matches(spark, tmp_path):
-    """Cache-mode lpa_csr equals the cogrouped path exactly (same kernel,
-    same schedule)."""
-    edges = graphs.two_islands_bridge()
-    df = graphs.to_df(spark, edges)
-    base = sorted((r.vid, r.label) for r in lpa_csr(spark, df, num_parts=4).collect())
-    cached = sorted(
-        (r.vid, r.label)
-        for r in lpa_csr(
-            spark, df, num_parts=4, cache_blocks=True,
-            blocks_dir=str(tmp_path / "lpa_blocks"),
-        ).collect()
-    )
-    assert base == cached
-
-
 def test_lpa_quiescent_passthrough_requires_proof_of_fixpoint():
     """LPA's partition passthrough needs BOTH no fresh messages AND the
     partition's own prior changed==0 (kind-2 row riding the carry) — the
     cycle damper can leave a non-fixpoint state when changed>0. Proven by
-    the cached kernel not touching its CSR block (bogus path would raise)."""
+    the cogroup kernel not decoding its CSR block (an undecodable block
+    would raise)."""
     import numpy as np
     import pandas as pd
     import pytest
 
     from goffish_v3_spark.operators.lpa import _make_lpa_kernel
 
-    kernel = _make_lpa_kernel(2, 10_000, blocks_path="/nonexistent/blocks")
+    bad_csr = graphs.undecodable_csr(1)
+    kernel = _make_lpa_kernel(2, 10_000)
     base = pd.DataFrame(
         {
             "part": np.array([1, 1, 1, 1, 1], dtype=np.int32),
@@ -159,7 +145,7 @@ def test_lpa_quiescent_passthrough_requires_proof_of_fixpoint():
          "vid": np.array([-1], dtype=np.int64), "a": np.array([0], dtype=np.int64)}
     )
     quiet = pd.concat([base, changed0], ignore_index=True)
-    out = kernel((1,), quiet)
+    out = kernel((1,), bad_csr, quiet)
     state = out[out["kind"] == 0].sort_values("vid")
     assert list(state["vid"]) == [10, 11] and list(state["a"]) == [7, 7]
     assert (out[out["kind"] == 4]["a"] == 7).all()          # prevprev preserved
@@ -170,13 +156,13 @@ def test_lpa_quiescent_passthrough_requires_proof_of_fixpoint():
 
     # prior changed > 0 → must NOT passthrough even without messages
     changed2 = changed0.assign(a=np.array([2], dtype=np.int64))
-    with pytest.raises(Exception):
-        kernel((1,), pd.concat([base, changed2], ignore_index=True))
+    with pytest.raises(ValueError):
+        kernel((1,), bad_csr, pd.concat([base, changed2], ignore_index=True))
 
     # a fresh message → must wake regardless of prior changed == 0
     msg = pd.DataFrame(
         {"part": np.array([1], dtype=np.int32), "kind": np.array([1], dtype=np.int32),
          "vid": np.array([20], dtype=np.int64), "a": np.array([9], dtype=np.int64)}
     )
-    with pytest.raises(Exception):
-        kernel((1,), pd.concat([quiet, msg], ignore_index=True))
+    with pytest.raises(ValueError):
+        kernel((1,), bad_csr, pd.concat([quiet, msg], ignore_index=True))

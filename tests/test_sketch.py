@@ -326,3 +326,31 @@ def test_sketches_reject_string_keys(spark):
     ):
         with pytest.raises(TypeError, match="integral"):
             fn()
+
+
+def test_sketches_accept_scale0_decimal_keys(spark):
+    """decimal(p,0) ids cast to long exactly, so they sketch like longs."""
+    from goffish_v3_spark.operators.sketch import hll_distinct_estimate
+
+    ldf = spark.range(0, 500).withColumnRenamed("id", "u")
+    ddf = ldf.select(F.col("u").cast("decimal(12,0)").alias("u"))
+    assert kmv_distinct_estimate(ddf, "u", k=32).first() == (
+        kmv_distinct_estimate(ldf, "u", k=32).first()
+    )
+    assert hll_distinct_estimate(ddf, "u").first() == (
+        hll_distinct_estimate(ldf, "u").first()
+    )
+    with pytest.raises(TypeError, match="integral"):
+        kmv_distinct_estimate(ldf.select(F.col("u").cast("decimal(12,2)").alias("u")), "u")
+
+
+def test_sketch_key_missing_column_is_named(spark):
+    df = spark.range(0, 10).withColumnRenamed("id", "u")
+    with pytest.raises(ValueError, match="'nope'"):
+        kmv_distinct_estimate(df, "nope")
+
+
+def test_sketch_key_expression_is_named(spark):
+    df = spark.range(0, 10).withColumnRenamed("id", "u")
+    with pytest.raises(ValueError, match=r"'u \+ 1'.*not an expression"):
+        kmv_distinct_estimate(df, "u + 1")

@@ -182,22 +182,3 @@ def test_csr_dedups_multi_edges_like_dataframe_pagerank(spark):
     j = a.withColumnRenamed("rank", "r1").join(b.withColumnRenamed("rank", "r2"), "vid")
     mx = j.select(F.max(F.abs(F.col("r1") - F.col("r2")))).collect()[0][0]
     assert mx < 1e-12
-
-
-def test_block_cache_mode_matches(spark, tmp_path):
-    """Cache-mode csr_pagerank (grouped map + worker-local blocks) equals the
-    cogrouped path bit-for-bit (same kernel, same update order)."""
-    edges = graphs.barabasi_albert(150, m=3)
-    df = graphs.to_df(spark, edges)
-    base = {
-        r.vid: r.rank
-        for r in csr_pagerank(spark, df, num_parts=4, fixed_iterations=6).collect()
-    }
-    cached = {
-        r.vid: r.rank
-        for r in csr_pagerank(
-            spark, df, num_parts=4, fixed_iterations=6,
-            cache_blocks=True, blocks_dir=str(tmp_path / "pr_blocks"),
-        ).collect()
-    }
-    assert base == cached

@@ -47,3 +47,12 @@ def test_partition_count_invariance(spark):
             sorted((r.vid, r.label) for r in wcc(spark, df, num_parts=p).collect())
         )
     assert results[0] == results[1] == results[2]
+
+
+def test_vids_near_int64_max(spark):
+    """Full-range 64-bit vids (xxhash64 ids reach ±2^63) must not overflow
+    the per-round convergence witness under Spark's ANSI arithmetic."""
+    base = 2**62
+    edges = [(base + i, base + i + 1) for i in range(40)]
+    edges += [(base + 1000 + i, base + 1001 + i) for i in range(40)]
+    _check(spark, edges)
