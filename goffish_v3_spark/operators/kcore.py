@@ -45,10 +45,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.sql import Observation
-
 from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks_sym
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop
 
 OUT_SCHEMA = "part int, kind int, vid long, a long, payload binary"
 
@@ -474,100 +472,85 @@ def _hindex_loop(
     ``changed_only`` also the kind-3 shadows, which together hold every
     boundary estimate — see :func:`_merge_boundary`). Callers filter kinds.
 
-    ``chain_every`` runs that many supersteps lazily inside ONE Spark job,
-    materializing (and reading the changed-count Observation) only at chain
-    boundaries: each inner step references the previous step's output once,
-    so the plan grows linearly. The per-superstep serial tax (driver round
-    trip + checkpoint) is paid once per chain; the fixpoint may overshoot by
-    up to chain−1 no-op steps. The chain length ADAPTS to the convergence
-    tail: once the observed changed-count drops below the partition count
-    the wavefront is narrow and fixpoint is near, so the chain halves per
-    round (VERDICT r3 #4) — long chains amortize the serial tax over the
-    bulk phase, short chains cap the no-op overshoot at the tail.
+    ``chain_every`` runs that many supersteps lazily inside ONE Spark job:
+    only the chain's last step hands the loop a witness (the changed-count),
+    so the loop materializes at chain boundaries. Each inner step references
+    the previous step's output once, so the plan grows linearly. The
+    per-superstep serial tax (driver round trip + checkpoint) is paid once
+    per chain; the fixpoint may overshoot by up to chain−1 no-op steps. The
+    chain length ADAPTS to the convergence tail: once the observed
+    changed-count drops below the partition count the wavefront is narrow
+    and fixpoint is near, so the chain halves per round (VERDICT r3 #4) —
+    long chains amortize the serial tax over the bulk phase, short chains
+    cap the no-op overshoot at the tail.
 
     ``consolidate_after`` hands the tail to :func:`_make_consolidated_kernel`
     after that many supersteps, provided the summed CSR block bytes fit
-    ``consolidate_budget_bytes``."""
-    import os
-    import time as _time
-
-    _trace = bool(os.environ.get("GOFFISH_KCORE_TRACE"))
+    ``consolidate_budget_bytes``: the hand-off is one more superstep, after
+    which the loop stops. The chain schedule and the hand-off flag are the
+    step's closure state."""
     if consolidate_after is not None and consolidate_after < max_iter:
         total_bytes = blocks.select(
             F.sum(40 * F.col("n_edges") + 24 * F.col("n_local"))
         ).first()[0]
         if (total_bytes or 0) > consolidate_budget_bytes:
             consolidate_after = None
-    carry = spark.createDataFrame([], OUT_SCHEMA)
     shrink_below = num_parts if num_parts is not None else 32
-    cur_chain = chain_every
-    step = 0
-    with no_aqe(spark):
-        while step < max_iter:
-            _t0 = _time.monotonic()
-            chain = max(1, min(cur_chain, max_iter - step))
-            if consolidate_after is not None and step < consolidate_after:
+    sched = {"chain": chain_every, "end": -1, "tail": False}
+
+    def step(carry: DataFrame, i: int) -> StepResult:
+        if sched["tail"]:
+            # tail consolidation: the distributed chains ground the bulk
+            # value creep in parallel; the remaining cross-partition cascade
+            # (tens of ~0.5 s grouped-map waves for a trickle of changes)
+            # collapses into ONE merged-fixpoint task, fed by a cogroup of
+            # every block with every kind-0 row under one key. Its output is
+            # the global fixpoint; the row count only ends the chain.
+            one = F.lit(0).alias("_one")
+            out = (
+                blocks.select("*", one)
+                .groupby("_one")
+                .cogroup(carry.filter(F.col("kind") == 0).select("*", one).groupby("_one"))
+                .applyInPandas(_make_consolidated_kernel(cap), schema=OUT_SCHEMA)
+            )
+            return StepResult(out, True, witness=F.count(F.lit(1)))
+        if i > sched["end"]:
+            length = min(sched["chain"], max_iter - i)
+            if consolidate_after is not None and i < consolidate_after:
                 # stop the chain exactly at the consolidation trigger: the
                 # distributed phase only needs to reach the hand-off point
                 # (budget-disabled runs keep full-length chains)
-                chain = max(1, min(chain, consolidate_after - step))
-            mixed = carry
-            out = None
-            for j in range(chain):
-                kernel = _make_kernel(step + j, cap=cap, changed_only=changed_only)
-                out = (
-                    blocks.groupby("part")
-                    .cogroup(mixed.groupby("part"))
-                    .applyInPandas(kernel, schema=OUT_SCHEMA)
-                )
-                if j < chain - 1:
-                    mixed = out.filter(F.col("kind") != 2)
-            # changed-count (of the chain's LAST step) rides the checkpoint
-            # materialization — one job per chain, like the PageRank ε-gate;
-            # changed == 0 in any step implies global fixpoint (monotone)
-            obs = Observation(f"kcore_chain_{step}")
-            out = out.observe(
-                obs, F.sum(F.when(F.col("kind") == 2, F.col("a"))).alias("changed")
-            ).localCheckpoint(eager=True)
-            # state + messages + shadows all feed the next superstep
-            carry = out.filter(F.col("kind") != 2)
-            step += chain
-            changed = obs.get["changed"] or 0
-            if _trace:
-                print(
-                    f"[kcore-trace] steps {step - chain}..{step - 1} "
-                    f"chain={chain} changed_last={changed} "
-                    f"wall={_time.monotonic() - _t0:.2f}s",
-                    flush=True,
-                )
-            if step >= 2 and changed == 0:
-                break
-            if consolidate_after is not None and step >= consolidate_after:
-                # tail consolidation: the distributed chains above ground the
-                # bulk value creep in parallel; the remaining cross-partition
-                # cascade (tens of ~0.5 s grouped-map waves for a trickle of
-                # changes) collapses into ONE merged-fixpoint task, fed by a
-                # cogroup of every block with every kind-0 row under one key
-                one = F.lit(0).alias("_one")
-                carry = (
-                    blocks.select("*", one)
-                    .groupby("_one")
-                    .cogroup(
-                        carry.filter(F.col("kind") == 0).select("*", one).groupby("_one")
-                    )
-                    .applyInPandas(_make_consolidated_kernel(cap), schema=OUT_SCHEMA)
-                    .localCheckpoint(eager=True)
-                )
-                if _trace:
-                    print(
-                        f"[kcore-trace] consolidated tail after step {step} "
-                        f"(changed={changed})",
-                        flush=True,
-                    )
-                break
-            if changed < shrink_below:
-                cur_chain = max(1, cur_chain // 2)
-    return carry
+                length = min(length, consolidate_after - i)
+            sched["end"] = i + max(1, length) - 1
+        # state + messages + shadows all feed the next superstep
+        out = (
+            blocks.groupby("part")
+            .cogroup(carry.filter(F.col("kind") != 2).groupby("part"))
+            .applyInPandas(
+                _make_kernel(i, cap=cap, changed_only=changed_only), schema=OUT_SCHEMA
+            )
+        )
+        if i < sched["end"]:
+            return StepResult(out, False)
+
+        def settle(changed) -> bool:
+            # changed == 0 in any step implies global fixpoint (monotone);
+            # supersteps 0 and 1 seed and run the first local pass
+            if i >= 1 and not changed:
+                return True
+            sched["tail"] = consolidate_after is not None and i + 1 >= consolidate_after
+            if (changed or 0) < shrink_below:
+                sched["chain"] = max(1, sched["chain"] // 2)
+            return False
+
+        return StepResult(
+            out, settle, witness=F.sum(F.when(F.col("kind") == 2, F.col("a")))
+        )
+
+    info = SuperstepLoop(spark, max_iter=max_iter).run(
+        spark.createDataFrame([], OUT_SCHEMA), step
+    )
+    return info.state.filter(F.col("kind") != 2)
 
 
 def core_numbers(

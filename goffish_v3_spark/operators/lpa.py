@@ -23,11 +23,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks_sym
-from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop, no_aqe
+from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop
 
 
 def _symmetrize(edges: DataFrame, partition_into: int | None = None) -> DataFrame:
@@ -90,25 +90,12 @@ def lpa(
                 F.col("label").alias("_old"),
             )
         )
+        # the changed-count rides the loop's lineage-truncating
+        # materialization (one job per round, same pattern as pagerank)
+        changed = F.sum(F.when(F.col("label") != F.col("_old"), 1).otherwise(0))
         if fixed_iterations is not None:
-            done = i + 1 >= fixed_iterations
-            return StepResult(
-                new_state.select("vid", "label").localCheckpoint(eager=True),
-                done,
-                truncated=True,
-            )
-        # one job: changed-count observed during the lineage-truncating
-        # materialization (same pattern as pagerank)
-        obs = Observation(f"lpa_step_{i}")
-        observed = new_state.observe(
-            obs,
-            F.sum(F.when(F.col("label") != F.col("_old"), 1).otherwise(0)).alias("changed"),
-        )
-        out = observed.localCheckpoint(eager=True)
-        changed = int(obs.get["changed"] or 0)
-        return StepResult(
-            out.select("vid", "label"), changed == 0, delta=float(changed), truncated=True
-        )
+            return StepResult(new_state, i + 1 >= fixed_iterations, witness=changed)
+        return StepResult(new_state, lambda n_changed: not n_changed, witness=changed)
 
     loop = SuperstepLoop(
         spark,
@@ -118,7 +105,7 @@ def lpa(
     )
     info = loop.run(init, step, resume=resume)
     und.unpersist()
-    return info.state
+    return info.state.select("vid", "label")
 
 
 # ---------------------------------------------------------------------------
@@ -409,32 +396,29 @@ def lpa_csr(
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts, part_expr=part_expr)
 
-    carry = spark.createDataFrame([], LPA_SCHEMA)
-    supersteps = 0
-    with no_aqe(spark):
-        for i in range(max_iter):
-            out = (
-                blocks.groupby("part")
-                .cogroup(carry.groupby("part"))
-                .applyInPandas(_make_lpa_kernel(i, max_local_sweeps), schema=LPA_SCHEMA)
-            )
-            obs = Observation(f"lpa_csr_step_{i}")
-            out = out.observe(
-                obs, F.sum(F.when(F.col("kind") == 2, F.col("a"))).alias("changed")
-            ).localCheckpoint(eager=True)
-            # kind-2 rows stay in the carry: each partition's changed
-            # count rides back to itself so the kernel's quiescent check
-            # can prove its state is a re-runnable fixpoint (1 row/part)
-            carry = out
-            supersteps = i + 1
-            if int(obs.get["changed"] or 0) == 0:
-                break
+    def step(carry: DataFrame, i: int) -> StepResult:
+        # kind-2 rows stay in the carry: each partition's changed count
+        # rides back to itself so the kernel's quiescent check can prove its
+        # state is a re-runnable fixpoint (1 row/part)
+        out = (
+            blocks.groupby("part")
+            .cogroup(carry.groupby("part"))
+            .applyInPandas(_make_lpa_kernel(i, max_local_sweeps), schema=LPA_SCHEMA)
+        )
+        return StepResult(
+            out,
+            lambda changed: not changed,
+            witness=F.sum(F.when(F.col("kind") == 2, F.col("a"))),
+        )
 
+    info = SuperstepLoop(spark, max_iter=max_iter).run(
+        spark.createDataFrame([], LPA_SCHEMA), step
+    )
     result = (
-        carry.filter(F.col("kind") == 0)
+        info.state.filter(F.col("kind") == 0)
         .select("vid", F.col("a").alias("label"))
         .localCheckpoint(eager=True)
     )
-    result.lpa_supersteps = supersteps
+    result.lpa_supersteps = info.supersteps
     blocks.unpersist()
     return result

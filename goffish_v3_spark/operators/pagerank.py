@@ -19,13 +19,15 @@ Spark shape per superstep (one job):
 
 The contribution aggregation is skew-safe via partial (map-side) aggregation:
 reducer fan-in per hot dst is bounded by the mapper count, not its in-degree.
-AQE skew-join handles out-degree skew on the state⋈adj side; see
-plans.partitioner for the explicit salting utilities used by the ingest path.
+AQE skew-join handles out-degree skew on the state⋈adj side. The opt-in
+``salt_threshold`` mode salts both axes inline (hubs found with
+``plans.partitioner.heavy_keys``); the generic salting utilities in
+plans.partitioner are called by no operator.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.superstep import RunInfo, StepResult, SuperstepLoop
@@ -371,30 +373,23 @@ def pagerank_with_info(
             # lazy plan grows linearly, and the per-superstep serial cost
             # (driver round-trip + checkpoint pass — measured ~7 s/step at
             # 55M edges regardless of cores) is paid once per chain instead
-            # of once per superstep.
-            materialized = done or (i + 1) % chain_every == 0
-            if materialized:
-                new_state = new_state.localCheckpoint(eager=True)
-            # truncated reflects what actually happened (ADVICE): the loop's
-            # truncate_every fallback (set to chain_every below) remains live
-            # for non-boundary steps instead of being silently bypassed
-            return StepResult(new_state, done, truncated=materialized)
+            # of once per superstep. The row count is observed only to end
+            # the chain; there is no convergence gate here.
+            if done or (i + 1) % chain_every == 0:
+                return StepResult(new_state, done, witness=F.count(F.lit(1)))
+            return StepResult(new_state, False)
         new_state = state.join(contrib, state.vid == contrib.dst, "left").select(
             "vid",
             (alpha * F.coalesce(F.col("s"), F.lit(0.0)) + base).alias("rank"),
             F.col("rank").alias("_old"),
         )
-        # ONE job per superstep: the ε-gate rides along the localCheckpoint
-        # materialization as an observed metric (reference's all-converged
-        # gate, PageRank.java:108-116, evaluated driver-side)
-        obs = Observation(f"pr_step_{i}")
-        observed = new_state.observe(
-            obs, F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta")
-        )
-        out = observed.select("vid", "rank", "_old").localCheckpoint(eager=True)
-        delta = obs.get["delta"]
+        # the ε-gate rides the loop's materialization as the observed witness
+        # (reference's all-converged gate, PageRank.java:108-116, evaluated
+        # driver-side)
         return StepResult(
-            out.select("vid", "rank"), delta <= eps, delta=float(delta), truncated=True
+            new_state,
+            lambda delta: delta <= eps,
+            witness=F.max(F.abs(F.col("rank") - F.col("_old"))),
         )
 
     from goffish_v3_spark.plans.partitioner import vertex_part
@@ -405,7 +400,6 @@ def pagerank_with_info(
         run_id=run_id,
         max_iter=(fixed_iterations if fixed_iterations is not None else max_iter),
         checkpoint_every=checkpoint_every,
-        truncate_every=(chain_every if fixed_iterations is not None else 1),
         partition_metrics=partition_metrics,
         # rank state carries no part column; ownership is computable
         # (plans.partitioner), so per-partition lineage metrics derive it
@@ -418,7 +412,7 @@ def pagerank_with_info(
         adj_s.unpersist()
     if vdim is not None:
         vdim.unpersist()
-    scores = info.state
+    scores = info.state.select("vid", "rank")
     if dim is not None:
         scores = (
             scores.join(dim, scores.vid == dim.ivid)

@@ -27,11 +27,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop
 
 INF = float("inf")
 
@@ -75,17 +75,45 @@ def sssp(
         .unionByName(e.select(F.col("dst").alias("vid")))
         .distinct()
     )
-    dist = vertices.select(
+    # state = distances + the frontier flag (the source starts it)
+    init = vertices.select(
         "vid",
         F.when(F.col("vid") == source, 0.0).otherwise(F.lit(INF)).alias("dist"),
         F.lit(-1).cast("long").alias("parent"),
+        (F.col("vid") == source).alias("_improved"),
     ).localCheckpoint(eager=True)
-    frontier = dist.filter(F.col("dist") == 0.0).select("vid", "dist")
 
-    with no_aqe(spark):
-        dist = _relax_loop(e, dist, frontier, max_iter)
+    def step(state: DataFrame, i: int) -> StepResult:
+        frontier = state.filter(F.col("_improved")).select("vid", "dist")
+        candidates = (
+            frontier.join(e, frontier.vid == e.src)
+            .select(
+                F.col("dst").alias("vid"),
+                (F.col("dist") + F.col("w")).alias("nd"),
+                F.col("src").alias("np"),
+            )
+            .groupBy("vid")
+            .agg(F.min(F.struct("nd", "np")).alias("m"))
+            .select("vid", F.col("m.nd").alias("nd"), F.col("m.np").alias("np"))
+        )
+        better = F.coalesce(F.col("nd"), F.lit(INF)) < F.col("dist")
+        merged = state.select("vid", "dist", "parent").join(
+            candidates, "vid", "left"
+        ).select(
+            "vid",
+            F.when(better, F.col("nd")).otherwise(F.col("dist")).alias("dist"),
+            F.when(better, F.col("np")).otherwise(F.col("parent")).alias("parent"),
+            better.alias("_improved"),
+        )
+        return StepResult(
+            merged,
+            lambda improved: not improved,
+            witness=F.sum(F.col("_improved").cast("long")),
+        )
+
+    info = SuperstepLoop(spark, max_iter=max_iter).run(init, step)
     e.unpersist()
-    return dist
+    return info.state.select("vid", "dist", "parent")
 
 
 _SSSP_EMPTY = {"part": "int32", "kind": "int32", "vid": "int64", "d": "f8", "p": "int64"}
@@ -258,67 +286,29 @@ def sssp_csr(
         )
     blocks = build_csr_blocks(spark, e, num_parts, part_expr=part_expr)
 
-    state = spark.createDataFrame([], SSSP_SCHEMA)
-    msgs = spark.createDataFrame([], SSSP_SCHEMA)
-    supersteps = 0
-    with no_aqe(spark):
-        for i in range(max_iter):
-            out = (
-                blocks.groupby("part")
-                .cogroup(state.unionByName(msgs).groupby("part"))
-                .applyInPandas(_make_sssp_kernel(i, source), schema=SSSP_SCHEMA)
-            )
-            obs = Observation(f"sssp_csr_step_{i}")
-            out = out.observe(
-                obs, F.sum(F.when(F.col("kind") == 2, F.col("p"))).alias("improved")
-            ).localCheckpoint(eager=True)
-            state = out.filter(F.col("kind") == 0)
-            msgs = out.filter(F.col("kind") == 1)
-            supersteps = i + 1
-            if int(obs.get["improved"] or 0) == 0:
-                break
+    def step(carry: DataFrame, i: int) -> StepResult:
+        # state (kind 0) and messages (kind 1) feed the kernel; the per-part
+        # improved counts (kind 2) are the convergence witness
+        out = (
+            blocks.groupby("part")
+            .cogroup(carry.filter(F.col("kind") < 2).groupby("part"))
+            .applyInPandas(_make_sssp_kernel(i, source), schema=SSSP_SCHEMA)
+        )
+        return StepResult(
+            out,
+            lambda improved: not improved,
+            witness=F.sum(F.when(F.col("kind") == 2, F.col("p"))),
+        )
 
+    info = SuperstepLoop(spark, max_iter=max_iter).run(
+        spark.createDataFrame([], SSSP_SCHEMA), step
+    )
     result = (
-        state.select("vid", F.col("d").alias("dist"), F.col("p").alias("parent"))
+        info.state.filter(F.col("kind") == 0)
+        .select("vid", F.col("d").alias("dist"), F.col("p").alias("parent"))
         .localCheckpoint(eager=True)
     )
-    result.sssp_supersteps = supersteps  # introspection for tests/bench
+    result.sssp_supersteps = info.supersteps  # introspection for tests/bench
     blocks.unpersist()
     return result
 
-
-def _relax_loop(e, dist, frontier, max_iter):
-    for i in range(max_iter):
-        candidates = (
-            frontier.join(e, frontier.vid == e.src)
-            .select(
-                F.col("dst").alias("vid"),
-                (F.col("dist") + F.col("w")).alias("nd"),
-                F.col("src").alias("np"),
-            )
-            .groupBy("vid")
-            .agg(F.min(F.struct("nd", "np")).alias("m"))
-            .select("vid", F.col("m.nd").alias("nd"), F.col("m.np").alias("np"))
-        )
-        merged = dist.join(candidates, "vid", "left").select(
-            "vid",
-            F.when(
-                F.coalesce(F.col("nd"), F.lit(INF)) < F.col("dist"), F.col("nd")
-            ).otherwise(F.col("dist")).alias("dist"),
-            F.when(
-                F.coalesce(F.col("nd"), F.lit(INF)) < F.col("dist"), F.col("np")
-            ).otherwise(F.col("parent")).alias("parent"),
-            (F.coalesce(F.col("nd"), F.lit(INF)) < F.col("dist")).alias("_improved"),
-        )
-        # one job/superstep: improvement count observed during truncation
-        obs = Observation(f"sssp_step_{i}")
-        merged = merged.observe(
-            obs, F.sum(F.col("_improved").cast("long")).alias("improved")
-        ).localCheckpoint(eager=True)
-        improved = int(obs.get["improved"] or 0)
-        frontier = merged.filter(F.col("_improved")).select("vid", "dist")
-        dist = merged.select("vid", "dist", "parent")
-        if improved == 0:
-            break
-
-    return dist

@@ -32,11 +32,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop
 
 OUT_SCHEMA = "part int, kind int, vid long, a double, b double"
 
@@ -230,17 +230,41 @@ def csr_pagerank(
                     }
                 )
 
-    state = blocks.mapInPandas(init_rows, schema=OUT_SCHEMA).localCheckpoint(eager=True)
-    msgs = spark.createDataFrame([], "part int, kind int, vid long, a double, b double")
+    init = blocks.mapInPandas(init_rows, schema=OUT_SCHEMA).localCheckpoint(eager=True)
+    if fixed_iterations is None:
+        total, converged = max_iter, (lambda delta: delta is not None and delta <= eps)
+    else:
+        total, converged = fixed_iterations + 1, False
 
-    with no_aqe(spark):
-        state, supersteps = _csr_loop(
-            blocks, state, msgs, alpha, base, eps, max_iter,
-            fixed_iterations=fixed_iterations,
-            local_init=local_init, local_eps=local_eps, n_total=n,
+    def step(carry: DataFrame, i: int) -> StepResult:
+        # inbound contributions pre-summed to one row per (part, vid)
+        msgs = (
+            carry.filter(F.col("kind") == 1)
+            .groupBy("part", "kind", "vid")
+            .agg(F.sum("a").alias("a"), F.lit(0.0).alias("b"))
+            .select("part", "kind", "vid", "a", "b")
         )
-    result = state.select("vid", F.col("a").alias("rank")).localCheckpoint(eager=True)
-    result.pr_supersteps = supersteps  # introspection for tests/bench
+        kernel = _make_kernel(
+            i, alpha, base, local_init=local_init, local_eps=local_eps, n_total=n,
+        )
+        out = (
+            blocks.groupby("part")
+            .cogroup(carry.filter(F.col("kind") == 0).unionByName(msgs).groupby("part"))
+            .applyInPandas(kernel, schema=OUT_SCHEMA)
+        )
+        # the ε-gate's max-delta is the observed witness: ONE Spark job per
+        # superstep, not a second collect() job over the kind=2 rows
+        return StepResult(
+            out, converged, witness=F.max(F.when(F.col("kind") == 2, F.col("a")))
+        )
+
+    info = SuperstepLoop(spark, max_iter=total).run(init, step)
+    result = (
+        info.state.filter(F.col("kind") == 0)
+        .select("vid", F.col("a").alias("rank"))
+        .localCheckpoint(eager=True)
+    )
+    result.pr_supersteps = info.supersteps  # introspection for tests/bench
     if own_blocks:
         blocks.unpersist()
     return result
@@ -251,42 +275,4 @@ def subgraph_rank(spark: SparkSession, edges: DataFrame, **kw) -> DataFrame:
     with the local-convergence warm start; converges to the same scores as
     plain PageRank in fewer global supersteps."""
     return csr_pagerank(spark, edges, local_init=True, **kw)
-
-
-def _csr_loop(
-    blocks, state, msgs, alpha, base, eps, max_iter,
-    fixed_iterations=None, local_init=False, local_eps=0.05, n_total=None,
-):
-    total = max_iter if fixed_iterations is None else fixed_iterations + 1
-    i = 0
-    for i in range(total):
-        kernel = _make_kernel(
-            i, alpha, base, local_init=local_init, local_eps=local_eps, n_total=n_total,
-        )
-        out = (
-            blocks.groupby("part")
-            .cogroup(state.unionByName(msgs).groupby("part"))
-            .applyInPandas(kernel, schema=OUT_SCHEMA)
-        )
-        # the ε-gate's max-delta rides the checkpoint materialization as an
-        # Observation — ONE Spark job per superstep (the kcore/sssp pattern),
-        # not a second collect() job over the kind=2 rows
-        obs = Observation(f"csr_pr_step_{i}")
-        out = out.observe(
-            obs, F.max(F.when(F.col("kind") == 2, F.col("a"))).alias("delta")
-        ).localCheckpoint(eager=True)
-        state = out.filter(F.col("kind") == 0)
-        msgs = (
-            out.filter(F.col("kind") == 1)
-            .groupBy("part", "kind", "vid")
-            .agg(F.sum("a").alias("a"), F.lit(0.0).alias("b"))
-            .select("part", "kind", "vid", "a", "b")
-        )
-        if fixed_iterations is None:
-            delta = obs.get["delta"]
-            if delta is not None and delta <= eps:
-                break
-
-    return state, i + 1
-
 

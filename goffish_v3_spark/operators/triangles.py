@@ -31,14 +31,14 @@ contributes ~(d/2)² wedges under id orientation). Two defenses, both here:
   degree orientation when it is explosive — the wedge-count guard
   (VERDICT r4 #9). Callers that know their degree distribution can pin
   "id" (uniform-ish graphs, 2-exchange plan) or "degree" (skewed graphs)
-  and skip the probe jobs.
+  and skip the probe job.
 
 Per-vertex counts explode each triangle's three corners and aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 # auto mode: switch to degree orientation when ONE wedge-join key would
@@ -94,21 +94,26 @@ def _degree_oriented(o: DataFrame) -> DataFrame:
     )
 
 
-def _id_wedge_stats(o: DataFrame) -> tuple[int, int]:
-    """``(total, max_per_key)`` id-oriented wedge-join output size WITHOUT
-    materializing it: per key x the join emits (#edges with v=x) ×
-    (#edges with u=x) rows — one O(m) aggregate."""
+def _id_wedge_row(o: DataFrame) -> Row:
+    """One O(m) aggregate over the id-oriented edges: the wedge-join output
+    size ``w`` and its largest per-key share ``mx`` WITHOUT materializing
+    the join (per key x it emits (#edges with v=x) × (#edges with u=x)
+    rows), plus the edge count ``m`` = Σ of the per-``u`` counts. The join
+    is full outer because a key seen only as ``u`` — the lowest id of every
+    component, at least — still counts toward ``m``."""
     as_v = o.groupBy(F.col("v").alias("x")).agg(F.count("*").alias("n1"))
     as_u = o.groupBy(F.col("u").alias("x")).agg(F.count("*").alias("n2"))
-    row = as_v.join(as_u, "x").agg(
+    return as_v.join(as_u, "x", "full").agg(
         F.sum(F.col("n1") * F.col("n2")).alias("w"),
         F.max(F.col("n1") * F.col("n2")).alias("mx"),
+        F.coalesce(F.sum("n2"), F.lit(0)).alias("m"),
     ).collect()[0]
+
+
+def _id_wedge_stats(o: DataFrame) -> tuple[int, int]:
+    """``(total, max_per_key)`` id-oriented wedge-join output size."""
+    row = _id_wedge_row(o)
     return int(row.w or 0), int(row.mx or 0)
-
-
-def _id_wedge_count(o: DataFrame) -> int:
-    return _id_wedge_stats(o)[0]
 
 
 def _degree_wedge_count(do: DataFrame) -> int:
@@ -128,7 +133,7 @@ def wedge_count(edges: DataFrame, orientation: str = "id") -> int:
     quadratic, computed by cheap aggregation (never materializing wedges)."""
     o = oriented_edges(edges)
     if orientation == "id":
-        return _id_wedge_count(o)
+        return _id_wedge_stats(o)[0]
     if orientation == "degree":
         return _degree_wedge_count(_degree_oriented(o))
     raise ValueError(f"orientation must be 'id' or 'degree', got {orientation!r}")
@@ -200,11 +205,9 @@ def triangles(edges: DataFrame, orientation: str = "auto") -> DataFrame:
     )
     e = oriented_edges(edges, partition_into=n_shuffle)
     if orientation == "auto":
-        m = e.count()
-        _, maxw = _id_wedge_stats(e)
-        orientation = (
-            "id" if maxw <= AUTO_HUB_WEDGE_LIMIT_FACTOR * max(m, 1) else "degree"
-        )
+        row = _id_wedge_row(e)
+        hub_free = (row.mx or 0) <= AUTO_HUB_WEDGE_LIMIT_FACTOR * max(row.m, 1)
+        orientation = "id" if hub_free else "degree"
     if orientation == "id":
         return _triangles_id(e)
     return _triangles_degree(e)

@@ -29,11 +29,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.partitioner import vertex_part
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop
 
 
 def _local_components(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -97,15 +97,10 @@ def _hash_min_fixpoint(spark: SparkSession, meta_edges: DataFrame, max_iter: int
     )
     sym = sym.distinct().persist()
     nodes = sym.select(F.col("a").alias("label")).distinct()
-    mapping = nodes.withColumn("root", F.col("label")).localCheckpoint(eager=True)
-    with no_aqe(spark):
-        mapping = _min_rounds(sym, mapping, max_iter)
-    sym.unpersist()
-    return mapping
+    init = nodes.withColumn("root", F.col("label")).localCheckpoint(eager=True)
 
-
-def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
-    for i in range(max_iter):
+    def step(state: DataFrame, i: int) -> StepResult:
+        mapping = state.select("label", "root")
         neigh_min = (
             sym.join(mapping, sym.b == mapping.label)
             .groupBy("a")
@@ -133,17 +128,16 @@ def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
         )
         # convergence witness: how many labels' roots moved this round — an
         # exact count, so it cannot overflow the way a sum of 64-bit vids
-        # does under ANSI arithmetic. Observed during the lineage-truncating
-        # materialization: ONE job per round, no separate agg job (the
-        # repo-wide Observation-on-checkpoint pattern)
-        obs = Observation(f"wcc_min_round_{i}")
-        m2 = m2.observe(
-            obs, F.count(F.when(F.col("root") != F.col("old_root"), 1)).alias("moved")
-        ).localCheckpoint(eager=True)
-        mapping = m2.select("label", "root")
-        if obs.get["moved"] == 0:
-            break
-    return mapping
+        # does under ANSI arithmetic
+        return StepResult(
+            m2,
+            lambda moved: moved == 0,
+            witness=F.count(F.when(F.col("root") != F.col("old_root"), 1)),
+        )
+
+    info = SuperstepLoop(spark, max_iter=max_iter).run(init, step)
+    sym.unpersist()
+    return info.state.select("label", "root")
 
 
 def wcc(

@@ -7,13 +7,20 @@ loop where each superstep is one DataFrame job: the shuffle boundary *is*
 ``peer.sync()``, the driver *is* the master, and convergence is a driver-side
 aggregate — no distributed consensus protocol needed (SURVEY.md §2.A A1/A6/A7).
 
-What this module adds over a bare ``for`` loop (north_rule requirements):
+:class:`SuperstepLoop` is the ONE place a superstep job runs. An operator's
+step only plans: it returns its next state un-materialized and, on the
+supersteps that end a chain, the aggregate to observe (its *witness*). The
+loop then owns the mechanics (north_rule requirements):
+- **one job per chain**: ``observe(witness)`` + ``localCheckpoint(eager=True)``
+  materialize the state and read the convergence aggregate in the same
+  Spark job, which also truncates lineage — iterative plans that reference
+  the previous state grow without bound otherwise (SURVEY.md §7.3);
+- **convergence**: the observed value goes to the step's convergence test;
+- **AQE off** for the whole loop (:func:`no_aqe`);
 - **checkpointing**: per-superstep state written to the state store
   (parquet dirs here; Iceberg tables on a cluster with the runtime jar — the
   layout ``{root}/{run_id}/state/superstep=k`` maps 1:1 onto an Iceberg
   partition spec) so any run is resumable mid-iteration;
-- **lineage truncation**: iterative plans grow without bound; reading the
-  checkpoint back each superstep resets lineage (SURVEY.md §7.3);
 - **metrics**: per-superstep, per-partition rows (rows, messages, delta,
   wall ms) — the analogue of the reference's GOFFISH3.PERF.* logs
   (hama GraphJobRunner.java:123-178,296-351).
@@ -24,13 +31,12 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Callable
+from typing import Any, Callable
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -62,20 +68,25 @@ def no_aqe(spark: SparkSession):
 
 @dataclass
 class StepResult:
-    """One superstep's output: next state + convergence signal + metrics.
+    """One superstep's output: the next state, un-materialized, plus its
+    convergence signal.
 
-    ``truncated=True`` tells the loop the step already severed lineage
-    (e.g. via observe+localCheckpoint in one job) — IMPORTANT for iterative
-    algorithms whose step plan references the previous state more than once:
-    without per-step truncation the logical plan doubles every superstep and
-    Catalyst analysis time grows exponentially.
+    ``witness`` marks the end of a chain: an aggregate Column the loop
+    observes while it materializes ``state`` (one job), recording the
+    observed value as the superstep's ``delta``. A step without a witness is
+    chained lazily into the next one — legal only while each step references
+    the previous state once, otherwise the plan doubles per superstep and
+    Catalyst analysis grows exponentially.
+
+    ``converged`` is a bool or a test called with the observed witness value
+    (``None`` when there is no witness or the aggregate saw no rows).
     """
 
     state: DataFrame
-    converged: bool
+    converged: bool | Callable[[Any], bool]
     delta: float = float("nan")
     messages: int = -1
-    truncated: bool = False
+    witness: Column | None = None
     extra: dict = field(default_factory=dict)
 
 
@@ -97,7 +108,13 @@ class SuperstepLoop:
     ``step(state, i)`` is the analogue of the user ``compute()`` hook
     (api AbstractSubgraphComputation.java:49) lifted to whole-DataFrame
     granularity; inside it, algorithms use cogrouped ``applyInPandas`` for
-    partition-local kernels and plain DataFrame ops for exchanges.
+    partition-local kernels and plain DataFrame ops for exchanges. The step
+    plans; the loop runs the job (see :class:`StepResult`): per witness step
+    ``observe`` + ``localCheckpoint`` in one Spark job, then the convergence
+    test on the observed value, then the checkpoint commit when
+    ``checkpoint_dir`` is set. The state the loop hands back is the step's
+    output as returned, so operators that keep state and messages in one
+    kind-tagged frame split it inside the next step.
     """
 
     def __init__(
@@ -107,7 +124,6 @@ class SuperstepLoop:
         run_id: str | None = None,
         max_iter: int = 100,
         checkpoint_every: int = 1,
-        truncate_every: int = 1,
         partition_metrics: bool = False,
         partition_expr=None,
     ):
@@ -116,7 +132,6 @@ class SuperstepLoop:
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.max_iter = max_iter
         self.checkpoint_every = checkpoint_every
-        self.truncate_every = truncate_every
         self.partition_metrics = partition_metrics
         # per-partition lineage/metrics (north_rule) for states WITHOUT a
         # materialized part column: a Column expression deriving the
@@ -202,25 +217,27 @@ class SuperstepLoop:
         for i in range(start, self.max_iter):
             ts = time.monotonic()
             res = step(state, i)
-            state = res.state
-            wall_ms = int((time.monotonic() - ts) * 1000)
+            state, delta, value = res.state, res.delta, None
+            if res.witness is not None:
+                obs = Observation(f"superstep_{i}")
+                state = state.observe(obs, res.witness.alias("w")).localCheckpoint(
+                    eager=True
+                )
+                value = obs.get["w"]
+                delta = float("nan") if value is None else float(value)
+            converged = res.converged(value) if callable(res.converged) else res.converged
             metrics = {
                 "rows": -1,
                 "msgs": res.messages,
-                "wall_ms": wall_ms,
-                "delta": res.delta,
+                "wall_ms": int((time.monotonic() - ts) * 1000),
+                "delta": delta,
                 "extra": res.extra,
             }
             if self.checkpoint_dir and (
-                (i % self.checkpoint_every == 0) or res.converged or i == self.max_iter - 1
+                (i % self.checkpoint_every == 0) or converged or i == self.max_iter - 1
             ):
                 state = self._commit(state, i, metrics)
-            elif not res.truncated and i % self.truncate_every == self.truncate_every - 1:
-                # truncate lineage (SURVEY §7.3); steps that already did this
-                # via observe+localCheckpoint set res.truncated
-                state = state.localCheckpoint(eager=True)
-            if res.converged:
-                converged = True
+            if converged:
                 i += 1
                 break
         else:

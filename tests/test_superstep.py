@@ -1,8 +1,11 @@
 """Superstep loop: checkpoint/resume + metrics table (north_rule gates)."""
 
+import uuid
+
 import pyspark.sql.functions as F
 
 from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop
+from tests import graphs
 
 
 def _inc_step(spark):
@@ -13,13 +16,38 @@ def _inc_step(spark):
     return step
 
 
+def _witness_step(converged):
+    """x += 1 with ``max(x)`` as the observed witness every superstep."""
+
+    def step(state, i):
+        new = state.withColumn("x", F.col("x") + 1)
+        return StepResult(new, converged, witness=F.max("x"))
+
+    return step
+
+
+def _jobs_in_group(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_runs_max_iter_and_counts(spark):
     init = spark.range(10).select(F.col("id").alias("vid"), F.lit(0).alias("x"))
-    loop = SuperstepLoop(spark, max_iter=5)
-    info = loop.run(init, _inc_step(spark))
-    assert info.supersteps == 5
-    assert not info.converged
-    assert all(r.x == 5 for r in info.state.collect())
+    # without a witness the steps chain lazily; with one whose test never
+    # passes every step is materialized — both run to max_iter
+    for step in (_inc_step(spark), _witness_step(lambda top: False)):
+        loop = SuperstepLoop(spark, max_iter=5)
+        info = loop.run(init, step)
+        assert info.supersteps == 5
+        assert not info.converged
+        assert all(r.x == 5 for r in info.state.collect())
 
 
 def test_checkpoint_resume_continues(spark, tmp_path):
@@ -47,6 +75,12 @@ def test_metrics_rows_written(spark, tmp_path):
     assert all(r.run_id == "m" for r in rows)
     assert set(m.columns) >= {"run_id", "superstep", "part", "rows", "msgs", "wall_ms", "delta", "extra"}
 
+    # a witness step records its observed value as the superstep's delta
+    loop = SuperstepLoop(spark, checkpoint_dir=ckpt, run_id="w", max_iter=3)
+    loop.run(init, _witness_step(False))
+    rows = loop.metrics().filter(F.col("part") == -1).collect()
+    assert {r.superstep: r.delta for r in rows} == {0: 1.0, 1: 2.0, 2: 3.0}
+
 
 def test_convergence_stops_early(spark):
     init = spark.range(4).select(F.col("id").alias("vid"), F.lit(0).alias("x"))
@@ -55,9 +89,82 @@ def test_convergence_stops_early(spark):
         new = state.withColumn("x", F.col("x") + 1)
         return StepResult(new, converged=(i == 2), delta=0.0)
 
-    info = SuperstepLoop(spark, max_iter=10).run(init, step)
-    assert info.converged
-    assert info.supersteps == 3
+    # a bool set by the step, or a test on the observed witness (max x
+    # reaches 3 on superstep 2)
+    for st in (step, _witness_step(lambda top: top >= 3)):
+        info = SuperstepLoop(spark, max_iter=10).run(init, st)
+        assert info.converged
+        assert info.supersteps == 3
+        assert all(r.x == 3 for r in info.state.collect())
+
+
+def test_witness_steps_materialize_once(spark):
+    """The loop runs ONE job per witness step (observe + localCheckpoint)
+    and none for the lazily chained steps between witnesses; every
+    superstep's rows are computed exactly once."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(x):
+        calls.add(1)
+        return x + 1
+
+    def step(state, i):
+        new = state.withColumn("x", bump("x"))
+        if i % 2 == 1:
+            return StepResult(new, False, witness=F.max("x"))
+        return StepResult(new, False)
+
+    init = spark.range(8).select(
+        F.col("id").alias("vid"), F.lit(0).cast("long").alias("x")
+    ).localCheckpoint(eager=True)
+    info, jobs = _jobs_in_group(
+        spark, lambda: SuperstepLoop(spark, max_iter=6).run(init, step)
+    )
+    assert info.supersteps == 6
+    assert jobs == 3
+    assert calls.value == 6 * 8
+    assert all(r.x == 6 for r in info.state.collect())
+    assert calls.value == 6 * 8  # the final state is materialized
+
+
+def test_operators_run_one_job_per_superstep(spark):
+    """Every superstep of a SuperstepLoop-driven operator is ONE Spark job.
+    SETUP is the most setup/finalize jobs (CSR build, N, init and result
+    checkpoints) any of these calls needs, measured on this graph; a
+    per-superstep count() or collect() would push past it."""
+    from goffish_v3_spark.operators.lpa import lpa_csr
+    from goffish_v3_spark.operators.sssp import sssp_csr
+    from goffish_v3_spark.operators.subgraph_pagerank import csr_pagerank
+    from goffish_v3_spark.operators.wcc import wcc
+
+    setup = 9
+    df = graphs.to_df(spark, graphs.barabasi_albert(100, m=2, seed=7))
+    runs = {
+        "csr_pagerank": lambda: csr_pagerank(
+            spark, df, num_parts=4, fixed_iterations=6
+        ).pr_supersteps,
+        "sssp_csr": lambda: sssp_csr(
+            spark, df, source=0, directed=False, num_parts=4
+        ).sssp_supersteps,
+        "lpa_csr": lambda: lpa_csr(spark, df, num_parts=4).lpa_supersteps,
+    }
+    for name, run in runs.items():
+        supersteps, jobs = _jobs_in_group(spark, run)
+        assert supersteps >= 5, (name, supersteps)
+        assert jobs <= supersteps + setup, (name, supersteps, jobs)
+
+    # wcc reports no superstep count: cap its meta-graph rounds with
+    # max_iter on a path whose contracted meta graph needs more rounds than
+    # that. Its per-round plan also broadcasts the small label mapping,
+    # which Spark runs as a job of its own — two jobs per round; the
+    # setup (local union-find, meta edges, result) is 23 jobs.
+    path = spark.createDataFrame([(i, i + 1) for i in range(60)], "src long, dst long")
+    rounds = 4
+    _, jobs = _jobs_in_group(
+        spark, lambda: wcc(spark, path, num_parts=4, max_iter=rounds).count()
+    )
+    assert jobs <= 2 * rounds + 23, jobs
 
 
 def test_pagerank_partition_metrics_persisted(spark, tmp_path):

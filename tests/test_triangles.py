@@ -43,27 +43,37 @@ def test_direction_insensitive(spark):
 
 def test_triangle_count_leaves_no_persisted_tables(spark):
     """triangles() must not leak a cached table per call (VERDICT r4 #2):
-    net persistent-RDD count is unchanged after triangle_count returns."""
+    no persistent RDD exists after triangle_count returns that did not
+    exist before. Compared by id, not count: the context cleaner may
+    unpersist an earlier test's garbage RDD at any moment."""
     df = graphs.to_df(spark, graphs.clique(8))
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert triangle_count(df) == comb(8, 3)
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after == before
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert after <= before, after - before
 
 
 def test_degree_orientation_matches_id(spark):
-    """The hub-proof degree orientation (wedge-count guard) finds exactly
-    the same triangle set as the id orientation."""
-    from goffish_v3_spark.operators.triangles import triangles
+    """The hub-proof degree orientation (wedge-count guard) and the auto
+    probe find exactly the same triangle set as the id orientation; the
+    probe's folded-in edge count equals the oriented table's row count."""
+    from goffish_v3_spark.operators.triangles import (
+        _id_wedge_row,
+        oriented_edges,
+        triangles,
+    )
 
     edges = graphs.barabasi_albert(150, m=3)
     df = graphs.to_df(spark, edges)
     tid = sorted((r.u, r.v, r.w) for r in triangles(df, orientation="id").collect())
-    tdeg = sorted(
-        (r.u, r.v, r.w) for r in triangles(df, orientation="degree").collect()
-    )
-    assert tid == tdeg
+    for orientation in ("degree", "auto"):
+        tother = sorted(
+            (r.u, r.v, r.w) for r in triangles(df, orientation=orientation).collect()
+        )
+        assert tid == tother, orientation
     assert triangle_count(df) == triangle_oracle(edges)  # auto default
+    o = oriented_edges(df)
+    assert _id_wedge_row(o).m == o.count()
 
 
 def test_auto_guard_picks_degree_on_mid_id_hub(spark):
