@@ -400,10 +400,13 @@ def pagerank_with_info(
         run_id=run_id,
         max_iter=(fixed_iterations if fixed_iterations is not None else max_iter),
         checkpoint_every=checkpoint_every,
-        partition_metrics=partition_metrics,
         # rank state carries no part column; ownership is computable
         # (plans.partitioner), so per-partition lineage metrics derive it
-        partition_expr=vertex_part(F.col("vid"), n_shuffle),
+        partitions=(
+            (vertex_part(F.col("vid"), n_shuffle), n_shuffle)
+            if partition_metrics
+            else None
+        ),
     )
     info = loop.run(init, step, resume=resume)
     if adj is not None:

@@ -11,19 +11,31 @@ aggregate — no distributed consensus protocol needed (SURVEY.md §2.A A1/A6/A7
 step only plans: it returns its next state un-materialized and, on the
 supersteps that end a chain, the aggregate to observe (its *witness*). The
 loop then owns the mechanics (north_rule requirements):
-- **one job per chain**: ``observe(witness)`` + ``localCheckpoint(eager=True)``
-  materialize the state and read the convergence aggregate in the same
-  Spark job, which also truncates lineage — iterative plans that reference
-  the previous state grow without bound otherwise (SURVEY.md §7.3);
+- **one job per materialized superstep**: ``observe(witness)`` +
+  ``localCheckpoint(eager=True)`` materialize the state and read the
+  convergence aggregate in the same Spark job, which also truncates lineage —
+  iterative plans that reference the previous state grow without bound
+  otherwise (SURVEY.md §7.3). Steps without a witness chain lazily into the
+  next one;
 - **convergence**: the observed value goes to the step's convergence test;
-- **AQE off** for the whole loop (:func:`no_aqe`);
-- **checkpointing**: per-superstep state written to the state store
-  (parquet dirs here; Iceberg tables on a cluster with the runtime jar — the
-  layout ``{root}/{run_id}/state/superstep=k`` maps 1:1 onto an Iceberg
-  partition spec) so any run is resumable mid-iteration;
-- **metrics**: per-superstep, per-partition rows (rows, messages, delta,
-  wall ms) — the analogue of the reference's GOFFISH3.PERF.* logs
-  (hama GraphJobRunner.java:123-178,296-351).
+- **AQE off** for the whole loop (:func:`no_aqe`), and every job tagged
+  ``<operator>:superstep=<i>`` as its Spark job description;
+- **checkpoints**: with ``checkpoint_dir`` set, each superstep on the
+  schedule (every ``checkpoint_every``-th and the last) is committed by ONE
+  job — the parquet write of ``{root}/{run_id}/state/superstep=k``, which
+  also observes the witness, the row count and the per-partition counts; the
+  loop continues from that parquet, reread with the known schema. A
+  superstep that converges off the schedule was already materialized by its
+  witness job, so its commit costs one more job (the observed write). The
+  layout maps 1:1 onto an Iceberg partition spec on a cluster with the
+  runtime jar, and any run is resumable from its last commit;
+- **metrics**: per committed superstep one global row (rows, messages,
+  delta, wall ms incl. the commit) plus one row per partition — the analogue
+  of the reference's GOFFISH3.PERF.* logs (hama
+  GraphJobRunner.java:123-178,296-351). These rows and the resume manifest
+  are written by the driver, not by Spark jobs, through the checkpoint
+  root's Hadoop ``FileSystem`` — the same store as the state, whatever the
+  scheme (``file://``, ``hdfs://``, ``s3a://``, or a plain local path).
 """
 
 from __future__ import annotations
@@ -33,7 +45,6 @@ import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from pathlib import Path
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -102,6 +113,52 @@ class RunInfo:
     state: DataFrame
 
 
+class _HadoopStore:
+    """Small driver-side files (manifest, metrics parquet) on the Hadoop
+    ``FileSystem`` of a checkpoint root, over py4j — the store Spark writes
+    the state to, for any scheme. Every put writes a temp file and renames
+    it onto the target, so a reader sees the old file or the new one, never
+    a torn one (where the store's rename is atomic, e.g. HDFS and local)."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        sc = spark.sparkContext
+        hfs = sc._jvm.org.apache.hadoop.fs
+        conf = sc._jsc.hadoopConfiguration()
+        self._jvm = sc._jvm
+        self._hpath = hfs.Path
+        self._fs = hfs.Path(root).getFileSystem(conf)
+        self._fc = hfs.FileContext.getFileContext(self._fs.getUri(), conf)
+        self._overwrite = sc._gateway.new_array(hfs.Options.Rename, 1)
+        self._overwrite[0] = hfs.Options.Rename.OVERWRITE
+
+    def _path(self, path: str):
+        return self._fs.makeQualified(self._hpath(path))
+
+    def get(self, path: str) -> bytes | None:
+        p = self._path(path)
+        if not self._fs.exists(p):
+            return None
+        stream = self._fs.open(p)
+        try:
+            return bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        finally:
+            stream.close()
+
+    def put(self, path: str, data: bytes) -> None:
+        p = self._path(path)
+        # a leading dot hides the temp file from Spark's parquet reader
+        tmp = self._hpath(p.getParent(), f".{p.getName()}.{uuid.uuid4().hex}")
+        out = self._fs.create(tmp, True)
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+        # a plain rename refuses an existing target; the FileContext one
+        # replaces it (~25 ms more on a local root, so only when needed)
+        if not self._fs.rename(tmp, p):
+            self._fc.rename(tmp, p, self._overwrite)
+
+
 class SuperstepLoop:
     """Drive ``step`` to convergence with checkpoint/resume + metrics.
 
@@ -109,12 +166,17 @@ class SuperstepLoop:
     (api AbstractSubgraphComputation.java:49) lifted to whole-DataFrame
     granularity; inside it, algorithms use cogrouped ``applyInPandas`` for
     partition-local kernels and plain DataFrame ops for exchanges. The step
-    plans; the loop runs the job (see :class:`StepResult`): per witness step
-    ``observe`` + ``localCheckpoint`` in one Spark job, then the convergence
-    test on the observed value, then the checkpoint commit when
-    ``checkpoint_dir`` is set. The state the loop hands back is the step's
-    output as returned, so operators that keep state and messages in one
-    kind-tagged frame split it inside the next step.
+    plans; the loop runs the jobs (see :class:`StepResult` and the module
+    docstring): a witness step is one ``observe`` + ``localCheckpoint`` job,
+    a scheduled checkpoint commit is one observed parquet write instead, and
+    only a convergence off the checkpoint schedule costs two. The state the
+    loop hands back is the step's output as returned (or its committed
+    parquet), so operators that keep state and messages in one kind-tagged
+    frame split it inside the next step.
+
+    ``partitions=(expr, n)`` adds per-partition row counts to each commit's
+    metrics: ``expr`` derives a state row's partition in ``[0, n)`` (e.g.
+    ``vertex_part(vid, n)``); the counts are observed by the commit's write.
     """
 
     def __init__(
@@ -124,86 +186,120 @@ class SuperstepLoop:
         run_id: str | None = None,
         max_iter: int = 100,
         checkpoint_every: int = 1,
-        partition_metrics: bool = False,
-        partition_expr=None,
+        partitions: tuple[Column, int] | None = None,
     ):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.max_iter = max_iter
         self.checkpoint_every = checkpoint_every
-        self.partition_metrics = partition_metrics
-        # per-partition lineage/metrics (north_rule) for states WITHOUT a
-        # materialized part column: a Column expression deriving the
-        # partition from the state row (e.g. vertex_part(vid, P))
-        self.partition_expr = partition_expr
+        self.partitions = partitions
+        self._store = _HadoopStore(spark, checkpoint_dir) if checkpoint_dir else None
 
     # -- checkpoint layout -------------------------------------------------
+    def _run_path(self) -> str:
+        return f"{self.checkpoint_dir}/{self.run_id}"
+
     def _state_path(self, superstep: int) -> str:
-        return f"{self.checkpoint_dir}/{self.run_id}/state/superstep={superstep}"
+        return f"{self._run_path()}/state/superstep={superstep}"
 
     def _metrics_path(self) -> str:
-        return f"{self.checkpoint_dir}/{self.run_id}/metrics"
-
-    def _manifest_path(self) -> Path:
-        return Path(f"{self.checkpoint_dir}/{self.run_id}/manifest.json")
+        return f"{self._run_path()}/metrics"
 
     def last_committed_superstep(self) -> int | None:
-        if not self.checkpoint_dir or not self._manifest_path().exists():
+        if self._store is None:
             return None
-        return json.loads(self._manifest_path().read_text())["last_superstep"]
+        manifest = self._store.get(f"{self._run_path()}/manifest.json")
+        return None if manifest is None else json.loads(manifest)["last_superstep"]
 
-    def _commit(self, state: DataFrame, superstep: int, metrics: dict) -> DataFrame:
-        """Write state + metrics, update manifest, return lineage-free state."""
+    def _write_state(
+        self, state: DataFrame, superstep: int, witness: Column | None
+    ) -> tuple[DataFrame, dict]:
+        """Write ``state`` to the store in ONE job that also observes the
+        row count, the witness (as ``w``) and the per-partition counts (as
+        ``part<p>``); return the state reread — lineage-free — and the
+        observed values."""
         path = self._state_path(superstep)
-        state.write.mode("overwrite").parquet(path)
-        mrows = [
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if witness is not None:
+            aggs.append(witness.alias("w"))
+        out = state
+        if self.partitions is not None:
+            # computed once per row, compared once per partition
+            expr, n = self.partitions
+            out = out.withColumn("__part", expr)
+            aggs += [F.count_if(F.col("__part") == p).alias(f"part{p}") for p in range(n)]
+        obs = Observation(f"commit_{superstep}")
+        out.observe(obs, *aggs).drop("__part").write.mode("overwrite").parquet(path)
+        return self.spark.read.schema(state.schema).parquet(path), obs.get
+
+    def _commit(self, superstep: int, metrics: dict, observed: dict) -> None:
+        """Record a written superstep: its metrics rows, then the manifest
+        that makes it the resume point — driver-side files, no Spark job."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rows = [
             {
                 "run_id": self.run_id,
                 "superstep": superstep,
                 "part": -1,
-                **{k: metrics[k] for k in ("rows", "msgs", "wall_ms")},
+                "rows": observed["rows"],
+                "msgs": metrics["msgs"],
+                "wall_ms": metrics["wall_ms"],
                 "delta": float(metrics["delta"]),
                 "extra": json.dumps(metrics.get("extra", {})),
             }
         ]
-        reread = self.spark.read.parquet(path)
-        part_key = None
-        if self.partition_metrics:
-            if "part" in state.columns:
-                part_key = F.col("part")
-            elif self.partition_expr is not None:
-                part_key = self.partition_expr
-        if part_key is not None:
-            for r in reread.groupBy(part_key.alias("part")).count().collect():
-                mrows.append(
-                    {
-                        "run_id": self.run_id,
-                        "superstep": superstep,
-                        "part": int(r["part"]),
-                        "rows": int(r["count"]),
-                        "msgs": -1,
-                        "wall_ms": -1,
-                        "delta": float("nan"),
-                        "extra": "{}",
-                    }
-                )
-        self.spark.createDataFrame(
-            mrows,
-            schema="run_id string, superstep int, part int, rows long, msgs long, wall_ms long, delta double, extra string",
-        ).write.mode("append").parquet(self._metrics_path())
+        if self.partitions is not None:
+            rows += [
+                {
+                    "run_id": self.run_id,
+                    "superstep": superstep,
+                    "part": p,
+                    "rows": observed[f"part{p}"],
+                    "msgs": -1,
+                    "wall_ms": -1,
+                    "delta": float("nan"),
+                    "extra": "{}",
+                }
+                for p in range(self.partitions[1])
+            ]
+        schema = pa.schema(
+            [
+                ("run_id", pa.string()),
+                ("superstep", pa.int32()),
+                ("part", pa.int32()),
+                ("rows", pa.int64()),
+                ("msgs", pa.int64()),
+                ("wall_ms", pa.int64()),
+                ("delta", pa.float64()),
+                ("extra", pa.string()),
+            ]
+        )
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
+        self._store.put(
+            f"{self._metrics_path()}/superstep-{superstep:06d}.parquet",
+            buf.getvalue().to_pybytes(),
+        )
         manifest = {"run_id": self.run_id, "last_superstep": superstep}
-        self._manifest_path().parent.mkdir(parents=True, exist_ok=True)
-        self._manifest_path().write_text(json.dumps(manifest))
-        return reread
+        self._store.put(f"{self._run_path()}/manifest.json", json.dumps(manifest).encode())
 
     # -- driver loop ---------------------------------------------------------
     def run(self, init_state: DataFrame, step: StepFn, resume: bool = False) -> RunInfo:
-        with no_aqe(self.spark):
-            return self._run(init_state, step, resume)
+        sc = self.spark.sparkContext
+        prev_description = sc.getLocalProperty("spark.job.description")
+        try:
+            with no_aqe(self.spark):
+                return self._run(init_state, step, resume)
+        finally:
+            sc.setJobDescription(prev_description)
 
     def _run(self, init_state: DataFrame, step: StepFn, resume: bool) -> RunInfo:
         t0 = time.monotonic()
+        sc = self.spark.sparkContext
+        op = getattr(step, "__module__", "").rpartition(".")[2] or "step"
         start = 0
         state = init_state
         if resume:
@@ -215,28 +311,40 @@ class SuperstepLoop:
         converged = False
         i = start
         for i in range(start, self.max_iter):
+            sc.setJobDescription(f"{op}:superstep={i}")
             ts = time.monotonic()
             res = step(state, i)
-            state, delta, value = res.state, res.delta, None
-            if res.witness is not None:
+            # the schedule is known before the job runs: those commits ride
+            # the superstep's one job
+            scheduled = self._store is not None and (
+                i % self.checkpoint_every == 0 or i == self.max_iter - 1
+            )
+            observed: dict = {}
+            if scheduled:
+                state, observed = self._write_state(res.state, i, res.witness)
+            elif res.witness is not None:
                 obs = Observation(f"superstep_{i}")
-                state = state.observe(obs, res.witness.alias("w")).localCheckpoint(
+                state = res.state.observe(obs, res.witness.alias("w")).localCheckpoint(
                     eager=True
                 )
-                value = obs.get["w"]
+                observed = obs.get
+            else:
+                state = res.state
+            value = observed.get("w")
+            delta = res.delta
+            if res.witness is not None:
                 delta = float("nan") if value is None else float(value)
             converged = res.converged(value) if callable(res.converged) else res.converged
-            metrics = {
-                "rows": -1,
-                "msgs": res.messages,
-                "wall_ms": int((time.monotonic() - ts) * 1000),
-                "delta": delta,
-                "extra": res.extra,
-            }
-            if self.checkpoint_dir and (
-                (i % self.checkpoint_every == 0) or converged or i == self.max_iter - 1
-            ):
-                state = self._commit(state, i, metrics)
+            if self._store is not None and (scheduled or converged):
+                if not scheduled:
+                    state, observed = self._write_state(state, i, None)
+                metrics = {
+                    "msgs": res.messages,
+                    "wall_ms": int((time.monotonic() - ts) * 1000),
+                    "delta": delta,
+                    "extra": res.extra,
+                }
+                self._commit(i, metrics, observed)
             if converged:
                 i += 1
                 break

@@ -119,3 +119,55 @@ def test_both_axes_must_be_green(monkeypatch):
     g = B.HostGuard(spark=None, warm_ref=1.0, py_ref=0.6)
     _, ok = g.checkpoint()
     assert ok is False
+
+
+# a full-suite result as main() records it: every query bench.py runs, walls
+# with three decimals, the edges/sec figures among a large ``extra``
+_SUITE_TIMINGS = {
+    name: 1.0 + i * 3.517
+    for i, name in enumerate(
+        B.CORE_QUERIES
+        + (
+            "pagerank_cs_converge_rel", "spanning_forest_cs", "kcore3_copart",
+            "link_pred_copart_s3", "triangle_count_skew10m",
+            "random_walks_skew10m", "asof_join_10m", "asof_join_skew10m_plain",
+            "asof_join_skew10m_sliced", "interval_join_10m",
+            "bloom_prefilter_10m", "repo_pagerank_10it_salted",
+            "hub_pagerank_5it", "hub_pagerank_5it_salted", "doc_quality",
+            "minhash_lsh", "ann_cosine_top5",
+        )
+    )
+}
+_SUITE_EXTRA = {
+    "pagerank_cs_edges_traversed_per_sec": 812345.6,
+    "repo_edges_traversed_per_sec": 90321.4,
+    "all_queries_host_ok": True,
+    "canary_by_query": {q: [0.412, 0.398] for q in _SUITE_TIMINGS},
+    "flagged_query_runs": {"doc_quality": [{"wall": 9.1, "host_ok": False}] * 3},
+}
+
+
+def _parse_headline(timings):
+    import json
+
+    text = B.headline(timings, _SUITE_EXTRA, "/root/testdata/sf0.1", 32)
+    assert "\n" not in text
+    assert len(text.encode()) < 2048, len(text.encode())
+    return json.loads(text)
+
+
+def test_headline_is_one_compact_parseable_line():
+    line = _parse_headline(_SUITE_TIMINGS)
+    assert line["value"] == round(sum(_SUITE_TIMINGS[q] for q in B.CORE_QUERIES), 3)
+    assert line["total_sec"] == round(sum(_SUITE_TIMINGS.values()), 3)
+    assert line["core_missing"] == []
+    assert set(line["queries"]) == set(_SUITE_TIMINGS)
+    assert line["edges_per_sec"] == {"pagerank_cs": 812345.6, "repo": 90321.4}
+    assert line["detail"] == B.DETAIL_PATH
+
+
+def test_headline_keeps_core_walls_when_the_suite_outgrows_it():
+    timings = {**_SUITE_TIMINGS, **{f"extra_query_{i:03d}": 2.5 for i in range(120)}}
+    line = _parse_headline(timings)
+    assert set(line["queries"]) == set(B.CORE_QUERIES)
+    assert line["total_sec"] == round(sum(timings.values()), 3)

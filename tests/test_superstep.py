@@ -82,6 +82,96 @@ def test_metrics_rows_written(spark, tmp_path):
     assert {r.superstep: r.delta for r in rows} == {0: 1.0, 1: 2.0, 2: 3.0}
 
 
+def test_uri_root_keeps_manifest_on_the_store(spark, tmp_path, monkeypatch):
+    """A scheme-qualified checkpoint root (``file://``, ``hdfs://``, ...)
+    keeps the manifest and metrics next to the state on that store — not
+    in a ``file:`` directory under the driver's working directory — and a
+    resume finds them."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    store = tmp_path / "store"
+    root = "file://" + str(store)
+    init = spark.range(4).select(F.col("id").alias("vid"), F.lit(0).alias("x"))
+    loop = SuperstepLoop(spark, checkpoint_dir=root, run_id="u", max_iter=3)
+    loop.run(init, _inc_step(spark))
+    assert (store / "u" / "manifest.json").is_file()
+    assert list(cwd.iterdir()) == []
+    assert {r.superstep for r in loop.metrics().collect()} == {0, 1, 2}
+
+    loop2 = SuperstepLoop(spark, checkpoint_dir=root, run_id="u", max_iter=5)
+    info = loop2.run(init, _inc_step(spark), resume=True)
+    assert info.supersteps == 2  # continued from superstep 3
+    assert all(r.x == 5 for r in info.state.collect())
+    assert loop2.last_committed_superstep() == 4
+    assert list(cwd.iterdir()) == []
+
+
+def test_commit_is_one_job_per_superstep(spark, tmp_path):
+    """A superstep committed on the checkpoint schedule costs ONE Spark job:
+    the parquet write observes the witness, the row count and the
+    per-partition counts; the manifest and metrics rows are driver-side
+    files. A convergence off the schedule costs at most two (the witness
+    job, then the observed write)."""
+    init = spark.range(8).select(
+        F.col("id").alias("vid"), F.lit(0).alias("x")
+    ).localCheckpoint(eager=True)
+    parts = (F.pmod(F.col("vid"), F.lit(3)).cast("int"), 3)
+    loop = SuperstepLoop(
+        spark, checkpoint_dir=str(tmp_path), run_id="j", max_iter=4,
+        checkpoint_every=1, partitions=parts,
+    )
+    info, jobs = _jobs_in_group(spark, lambda: loop.run(init, _witness_step(False)))
+    assert info.supersteps == 4
+    assert jobs == 4
+    m = loop.metrics()
+    glob = {r.superstep: r for r in m.filter(F.col("part") == -1).collect()}
+    assert {s: (r.rows, r.delta) for s, r in glob.items()} == {
+        s: (8, float(s + 1)) for s in range(4)
+    }
+    per_part = m.filter(F.col("part") >= 0).collect()
+    assert sorted((r.superstep, r.part, r.rows) for r in per_part) == [
+        (s, p, n) for s in range(4) for p, n in enumerate((3, 3, 2))
+    ]
+
+    # superstep 0 is on the schedule, superstep 1 converges off it
+    loop = SuperstepLoop(
+        spark, checkpoint_dir=str(tmp_path), run_id="o", max_iter=10,
+        checkpoint_every=5, partitions=parts,
+    )
+    info, jobs = _jobs_in_group(
+        spark, lambda: loop.run(init, _witness_step(lambda top: top >= 2))
+    )
+    assert info.converged and info.supersteps == 2
+    assert jobs <= 1 + 2
+    assert loop.last_committed_superstep() == 1
+    assert all(r.x == 2 for r in info.state.collect())
+    rows = loop.metrics().filter(F.col("part") == -1).collect()
+    assert {r.superstep: (r.rows, r.delta) for r in rows} == {0: (8, 1.0), 1: (8, 2.0)}
+
+
+def test_jobs_tagged_with_operator_and_superstep(spark):
+    """Every superstep's jobs carry ``<op>:superstep=<i>`` as their Spark
+    job description (op = the step's module); the caller's description is
+    restored when the loop exits."""
+    sc = spark.sparkContext
+    seen = []
+    witness = _witness_step(False)
+
+    def step(state, i):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return witness(state, i)
+
+    init = spark.range(4).select(F.col("id").alias("vid"), F.lit(0).alias("x"))
+    sc.setJobDescription("outer")
+    try:
+        SuperstepLoop(spark, max_iter=3).run(init, step)
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setJobDescription(None)
+    assert seen == [f"test_superstep:superstep={i}" for i in range(3)]
+
+
 def test_convergence_stops_early(spark):
     init = spark.range(4).select(F.col("id").alias("vid"), F.lit(0).alias("x"))
 
