@@ -402,10 +402,8 @@ def pagerank_with_info(
         checkpoint_every=checkpoint_every,
         # rank state carries no part column; ownership is computable
         # (plans.partitioner), so per-partition lineage metrics derive it
-        partitions=(
-            (vertex_part(F.col("vid"), n_shuffle), n_shuffle)
-            if partition_metrics
-            else None
+        partition_expr=(
+            vertex_part(F.col("vid"), n_shuffle) if partition_metrics else None
         ),
     )
     info = loop.run(init, step, resume=resume)

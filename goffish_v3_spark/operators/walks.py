@@ -10,13 +10,15 @@ coordinate across executors), and auditability (the whole walk replays
 in ANSI SQL — see :func:`random_walks_sql`).
 
 Scale shape: the adjacency is indexed ONCE — ``row_number`` per source
-over a single hash shuffle — and each edge annotated with its
-destination's out-degree, so a walker always knows the range of its next
-choice. Each of the ``length`` steps is then ONE equi-join of the walk
-frontier against the adjacency on ``(vertex, chosen index)``, laid out
-once on that key: work per step is |frontier| rows, not
-|frontier| × out-degree. Dead ends (out-degree 0) stay put — the walk is
-always defined, every start emits exactly ``length+1`` rows.
+over a single hash shuffle — then each of the ``length`` steps is ONE
+join of the walk frontier against it on the current vertex, filtered to
+the chosen index. The join emits |frontier| × out-degree rows before the
+filter keeps one per walker; an equi-join on ``(vertex, chosen index)``
+would emit |frontier| rows, but it needs each walker to carry its
+out-degree (one more join) and measured slower at the sizes tried
+(200 k and 2 M Zipf edges, where the whole adjacency is broadcast per
+hop anyway). Dead ends (out-degree 0) stay put — the walk is always
+defined, every start emits exactly ``length+1`` rows.
 
 Reference parity: the reference has no walk surface; this is part of
 the training-data-pipeline layer beyond reference coverage
@@ -115,18 +117,6 @@ def random_walks(
     adj = indexed_adjacency(edges)
     if materialize:
         adj = adj.localCheckpoint(eager=True)
-    # (vid, deg) per source; ``hops`` is the adjacency with each edge's
-    # destination degree, laid out once on the hop-join key
-    degs = adj.filter(F.col("idx") == 0).select(
-        F.col("src").alias("vid"), F.col("deg").alias("_deg")
-    )
-    hops = (
-        adj.join(degs, adj.dst == degs.vid, "left")
-        .select("src", "idx", "dst", F.col("_deg").alias("dst_deg"))
-        .repartition("src", "idx")
-    )
-    if materialize:
-        hops = hops.localCheckpoint(eager=True)
     verts = (
         edges.select(F.col("src").cast("long").alias("vid"))
         .unionByName(edges.select(F.col("dst").cast("long").alias("vid")))
@@ -135,29 +125,26 @@ def random_walks(
     walks = F.explode(
         F.array(*[F.lit(wk) for wk in range(num_walks)])
     ).alias("walk")
-    state = verts.join(degs, "vid", "left").select(
-        F.col("vid").alias("start_vid"), walks, F.col("vid").alias("cur"), "_deg"
+    state = verts.select(
+        F.col("vid").alias("start_vid"), walks, F.col("vid").alias("cur")
     )
     out = state.select(
         "start_vid", "walk", F.lit(0).alias("step"), F.col("cur").alias("vid")
     )
     for step in range(1, length + 1):
         key = _choice_key(F.col("cur"), step, F.col("walk"))
-        # a dead end has no degree: its index is NULL, the hop join misses
-        # and the walker stays put
-        st = state.select(
-            "start_vid",
-            "walk",
-            "cur",
-            F.pmod(_mix(key), F.col("_deg")).cast("int").alias("_idx"),
-        )
-        nxt = st.join(
-            hops, (st.cur == hops.src) & (st._idx == hops.idx), "left"
-        ).select(
-            "start_vid",
-            "walk",
-            F.coalesce(F.col("dst"), F.col("cur")).alias("cur"),
-            F.col("dst_deg").alias("_deg"),
+        st = state.withColumn("h", _mix(key))
+        nxt = (
+            st.join(adj, st.cur == adj.src, "left")
+            .filter(
+                F.col("src").isNull()
+                | (F.col("idx") == F.pmod(F.col("h"), F.col("deg")))
+            )
+            .select(
+                "start_vid",
+                "walk",
+                F.coalesce(F.col("dst"), F.col("cur")).alias("cur"),
+            )
         )
         state = nxt.localCheckpoint(eager=True) if materialize else nxt
         out = out.unionByName(

@@ -23,15 +23,16 @@ loop then owns the mechanics (north_rule requirements):
 - **checkpoints**: with ``checkpoint_dir`` set, each superstep on the
   schedule (every ``checkpoint_every``-th and the last) is committed by ONE
   job — the parquet write of ``{root}/{run_id}/state/superstep=k``, which
-  also observes the witness, the row count and the per-partition counts; the
-  loop continues from that parquet, reread with the known schema. A
-  superstep that converges off the schedule was already materialized by its
-  witness job, so its commit costs one more job (the observed write). The
-  layout maps 1:1 onto an Iceberg partition spec on a cluster with the
+  also observes the witness and the row count; the loop continues from that
+  parquet, reread with the known schema. A superstep that converges off the
+  schedule was already materialized by its witness job, so its commit costs
+  one more job (the observed write). Per-partition counts, when asked for,
+  cost one more job per commit (a ``groupBy`` over the committed parquet).
+  The layout maps 1:1 onto an Iceberg partition spec on a cluster with the
   runtime jar, and any run is resumable from its last commit;
 - **metrics**: per committed superstep one global row (rows, messages,
-  delta, wall ms incl. the commit) plus one row per partition — the analogue
-  of the reference's GOFFISH3.PERF.* logs (hama
+  delta, wall ms incl. the commit) plus, optionally, one row per non-empty
+  partition — the analogue of the reference's GOFFISH3.PERF.* logs (hama
   GraphJobRunner.java:123-178,296-351). These rows and the resume manifest
   are written by the driver, not by Spark jobs, through the checkpoint
   root's Hadoop ``FileSystem`` — the same store as the state, whatever the
@@ -153,10 +154,8 @@ class _HadoopStore:
             out.write(bytearray(data))
         finally:
             out.close()
-        # a plain rename refuses an existing target; the FileContext one
-        # replaces it (~25 ms more on a local root, so only when needed)
-        if not self._fs.rename(tmp, p):
-            self._fc.rename(tmp, p, self._overwrite)
+        # FileSystem.rename refuses an existing target; this one replaces it
+        self._fc.rename(tmp, p, self._overwrite)
 
 
 class SuperstepLoop:
@@ -174,9 +173,13 @@ class SuperstepLoop:
     parquet), so operators that keep state and messages in one kind-tagged
     frame split it inside the next step.
 
-    ``partitions=(expr, n)`` adds per-partition row counts to each commit's
-    metrics: ``expr`` derives a state row's partition in ``[0, n)`` (e.g.
-    ``vertex_part(vid, n)``); the counts are observed by the commit's write.
+    ``partition_expr`` adds per-partition row counts to each commit's
+    metrics: it derives a state row's partition (e.g. ``vertex_part(vid,
+    n)``), and one ``groupBy`` job over the committed parquet counts them.
+    They are not observed by the write: an observed count per partition
+    costs rows × partitions comparisons (first run, 200 k rows, 2000
+    partitions, 4 cores: 40 s per superstep, against 2.3 s with the
+    ``groupBy``).
     """
 
     def __init__(
@@ -186,14 +189,14 @@ class SuperstepLoop:
         run_id: str | None = None,
         max_iter: int = 100,
         checkpoint_every: int = 1,
-        partitions: tuple[Column, int] | None = None,
+        partition_expr: Column | None = None,
     ):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.max_iter = max_iter
         self.checkpoint_every = checkpoint_every
-        self.partitions = partitions
+        self.partition_expr = partition_expr
         self._store = _HadoopStore(spark, checkpoint_dir) if checkpoint_dir else None
 
     # -- checkpoint layout -------------------------------------------------
@@ -216,26 +219,22 @@ class SuperstepLoop:
         self, state: DataFrame, superstep: int, witness: Column | None
     ) -> tuple[DataFrame, dict]:
         """Write ``state`` to the store in ONE job that also observes the
-        row count, the witness (as ``w``) and the per-partition counts (as
-        ``part<p>``); return the state reread — lineage-free — and the
-        observed values."""
+        row count and the witness (as ``w``); return the state reread —
+        lineage-free — and the observed values."""
         path = self._state_path(superstep)
         aggs = [F.count(F.lit(1)).alias("rows")]
         if witness is not None:
             aggs.append(witness.alias("w"))
-        out = state
-        if self.partitions is not None:
-            # computed once per row, compared once per partition
-            expr, n = self.partitions
-            out = out.withColumn("__part", expr)
-            aggs += [F.count_if(F.col("__part") == p).alias(f"part{p}") for p in range(n)]
         obs = Observation(f"commit_{superstep}")
-        out.observe(obs, *aggs).drop("__part").write.mode("overwrite").parquet(path)
+        state.observe(obs, *aggs).write.mode("overwrite").parquet(path)
         return self.spark.read.schema(state.schema).parquet(path), obs.get
 
-    def _commit(self, superstep: int, metrics: dict, observed: dict) -> None:
+    def _commit(
+        self, superstep: int, state: DataFrame, metrics: dict, observed: dict
+    ) -> None:
         """Record a written superstep: its metrics rows, then the manifest
-        that makes it the resume point — driver-side files, no Spark job."""
+        that makes it the resume point — driver-side files; the only Spark
+        job is the per-partition count over the committed ``state``."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -251,19 +250,20 @@ class SuperstepLoop:
                 "extra": json.dumps(metrics.get("extra", {})),
             }
         ]
-        if self.partitions is not None:
+        if self.partition_expr is not None:
+            counts = state.groupBy(self.partition_expr.alias("part")).count()
             rows += [
                 {
                     "run_id": self.run_id,
                     "superstep": superstep,
-                    "part": p,
-                    "rows": observed[f"part{p}"],
+                    "part": int(r["part"]),
+                    "rows": int(r["count"]),
                     "msgs": -1,
                     "wall_ms": -1,
                     "delta": float("nan"),
                     "extra": "{}",
                 }
-                for p in range(self.partitions[1])
+                for r in counts.collect()
             ]
         schema = pa.schema(
             [
@@ -344,7 +344,7 @@ class SuperstepLoop:
                     "delta": delta,
                     "extra": res.extra,
                 }
-                self._commit(i, metrics, observed)
+                self._commit(i, state, metrics, observed)
             if converged:
                 i += 1
                 break

@@ -109,26 +109,29 @@ def test_uri_root_keeps_manifest_on_the_store(spark, tmp_path, monkeypatch):
 
 def test_commit_is_one_job_per_superstep(spark, tmp_path):
     """A superstep committed on the checkpoint schedule costs ONE Spark job:
-    the parquet write observes the witness, the row count and the
-    per-partition counts; the manifest and metrics rows are driver-side
-    files. A convergence off the schedule costs at most two (the witness
-    job, then the observed write)."""
+    the parquet write observes the witness and the row count; the manifest
+    and metrics rows are driver-side files. Per-partition counts add one
+    ``groupBy`` job per commit. A convergence off the schedule costs at
+    most two (the witness job, then the observed write)."""
     init = spark.range(8).select(
         F.col("id").alias("vid"), F.lit(0).alias("x")
     ).localCheckpoint(eager=True)
-    parts = (F.pmod(F.col("vid"), F.lit(3)).cast("int"), 3)
-    loop = SuperstepLoop(
-        spark, checkpoint_dir=str(tmp_path), run_id="j", max_iter=4,
-        checkpoint_every=1, partitions=parts,
-    )
-    info, jobs = _jobs_in_group(spark, lambda: loop.run(init, _witness_step(False)))
-    assert info.supersteps == 4
-    assert jobs == 4
-    m = loop.metrics()
-    glob = {r.superstep: r for r in m.filter(F.col("part") == -1).collect()}
-    assert {s: (r.rows, r.delta) for s, r in glob.items()} == {
-        s: (8, float(s + 1)) for s in range(4)
-    }
+    part = F.pmod(F.col("vid"), F.lit(3)).cast("int")
+    for run_id, expr, jobs_per_commit in (("j", None, 1), ("p", part, 2)):
+        loop = SuperstepLoop(
+            spark, checkpoint_dir=str(tmp_path), run_id=run_id, max_iter=4,
+            checkpoint_every=1, partition_expr=expr,
+        )
+        info, jobs = _jobs_in_group(
+            spark, lambda: loop.run(init, _witness_step(False))
+        )
+        assert info.supersteps == 4
+        assert jobs == 4 * jobs_per_commit
+        m = loop.metrics()
+        glob = {r.superstep: r for r in m.filter(F.col("part") == -1).collect()}
+        assert {s: (r.rows, r.delta) for s, r in glob.items()} == {
+            s: (8, float(s + 1)) for s in range(4)
+        }
     per_part = m.filter(F.col("part") >= 0).collect()
     assert sorted((r.superstep, r.part, r.rows) for r in per_part) == [
         (s, p, n) for s in range(4) for p, n in enumerate((3, 3, 2))
@@ -137,7 +140,7 @@ def test_commit_is_one_job_per_superstep(spark, tmp_path):
     # superstep 0 is on the schedule, superstep 1 converges off it
     loop = SuperstepLoop(
         spark, checkpoint_dir=str(tmp_path), run_id="o", max_iter=10,
-        checkpoint_every=5, partitions=parts,
+        checkpoint_every=5,
     )
     info, jobs = _jobs_in_group(
         spark, lambda: loop.run(init, _witness_step(lambda top: top >= 2))

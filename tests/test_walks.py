@@ -110,16 +110,3 @@ def test_string_ids_raise_loudly(spark):
     )
     with pytest.raises(TypeError, match="integral"):
         random_walks(e, length=2)
-
-
-def test_hop_is_equi_join_on_vertex_and_index(spark):
-    """Each hop joins the walker to its (vertex, chosen index) edge — both
-    keys in the join condition, so the join emits one row per walker, not
-    one per walker × out-degree for a filter to thin out."""
-    import re
-
-    e = _edges(spark, [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1)])
-    plan = random_walks(e, length=1)._jdf.queryExecution().executedPlan().toString()
-    hops = re.findall(r"Join \[cur#\d+L, _idx#\d+\], \[src#\d+L, idx#\d+\]", plan)
-    assert len(hops) == 1, plan
-    assert not re.search(r"Join \[cur#\d+L\], \[src#\d+L\]", plan), plan
